@@ -750,13 +750,6 @@ def ann_benchmark(spark, sf_dir: str) -> dict:
     # never touches the build path — the same build-vs-search split
     # the reference's day_6 summary reports (build 11.95 s amortized,
     # search per batch).
-    #
-    # The 0.735-recall SRP bucket tier was retired from this section
-    # (round-5 review): it reported a number below the reference's
-    # weakest HNSW figure that no tier decision would use.  The sketch
-    # path above IS the high-recall LSH-family tier; the scale section
-    # still reports bucket LSH where it wins (clustered corpora,
-    # recall 1.0).
     import shutil
     import tempfile
 
@@ -823,7 +816,7 @@ def ann_benchmark(spark, sf_dir: str) -> dict:
 
 
 def scale_benchmark(spark, sf_dir: str, factors) -> list:
-    """Exact vs IVF vs LSH on the inflated corpus (noisy replicas,
+    """Exact vs the ANN tiers on the inflated corpus (noisy replicas,
     tools/scale_probe.py): the regime where the corpus outgrows a
     single scan and the ANN paths earn their keep.  The inflated data
     is cluster-structured (copies stay near their source), which is
@@ -845,11 +838,8 @@ def scale_benchmark(spark, sf_dir: str, factors) -> list:
         kmeans_centroids,
         recall_against_exact,
     )
-    from python_vector_db___ai_spark.operators.lsh import srp_lsh_knn
     from python_vector_db___ai_spark.operators.search import knn_join_blas
     from python_vector_db___ai_spark.session import load_table
-
-    from python_vector_db___ai_spark.operators.lsh import srp_build
 
     emb = load_table(spark, sf_dir, "embeddings")
     # 10-query batch: the per-query-latency regime (the reference's
@@ -902,24 +892,6 @@ def scale_benchmark(spark, sf_dir: str, factors) -> list:
         ivf_df = spark.createDataFrame(ivf_rows, ivf.schema)
         entry["ivf_recall"] = round(
             recall_against_exact(ivf_df, exact_cached, corpus_id="vec_id")
-            .agg(F.avg("recall")).collect()[0][0], 4)
-
-        t0 = time.perf_counter()
-        H, cb = srp_build(corpus, n_tables=8, n_bits=12)
-        cb = cb.cache()
-        cb.count()
-        entry["lsh_build_sec"] = round(time.perf_counter() - t0, 3)
-        def run_lsh():
-            return srp_lsh_knn(queries, corpus, k=10, n_tables=8,
-                               n_bits=12, prebuilt=(H, cb)).collect()
-        sec, lsh_rows = timed_median(run_lsh)
-        entry["lsh_sec"] = round(sec, 3)
-        entry["lsh_sec_runs"] = timed_median.last_runs
-        lsh = srp_lsh_knn(queries, corpus, k=10, n_tables=8, n_bits=12,
-                          prebuilt=(H, cb))
-        lsh_df = spark.createDataFrame(lsh_rows, lsh.schema)
-        entry["lsh_recall"] = round(
-            recall_against_exact(lsh_df, exact_cached, corpus_id="vec_id")
             .agg(F.avg("recall")).collect()[0][0], 4)
 
         # Binary-sketch Hamming tier at scale: prebuilt sketch column,
@@ -1047,7 +1019,6 @@ def scale_benchmark(spark, sf_dir: str, factors) -> list:
         ea.unpersist()
         corpus.unpersist()
         assigned.unpersist()
-        cb.unpersist()
         skc.unpersist()
         enc.unpersist()
         exact_cached.unpersist()

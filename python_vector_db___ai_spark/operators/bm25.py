@@ -17,8 +17,6 @@ Deterministic (md5-free, plain arithmetic) and fully oracle-checkable.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -154,8 +152,7 @@ def term_df(postings: DataFrame) -> DataFrame:
 # ≈ 1M postings rows per task at the bench corpus's ~50 terms/doc —
 # comfortably in-memory for an executor core.  Same operator-owned
 # policy pattern as crossdoc's GRAMS_PER_PARTITION.
-BM25_DOCS_PER_PARTITION = int(os.environ.get(
-    "SPARK_GRAFT_BM25_DOCS_PER_PARTITION", "31250"))
+BM25_DOCS_PER_PARTITION = 31250
 
 # Zipf guard for the standing-index exchange (r13, from r12 ADVICE):
 # hash-partitioning postings on `term` alone sends EVERY posting of a
@@ -169,7 +166,13 @@ BM25_DOCS_PER_PARTITION = int(os.environ.get(
 # any one term over at most SALT tasks.  Each output file stays
 # sorted by term, so term min/max row-group pruning still works — a
 # queried term just matches row groups in <= SALT files instead of 1.
-BM25_TERM_SALT = int(os.environ.get("SPARK_GRAFT_BM25_TERM_SALT", "8"))
+BM25_TERM_SALT = 8
+
+# zstd for the standing artifact: smaller index files at similar read
+# speed — the term-sorted layout's row-group min/max pruning is
+# codec-agnostic (the read side decompresses only the row groups the
+# term-isin filter keeps).
+BM25_INDEX_CODEC = "zstd"
 
 
 def _save_postings_frame(docs: DataFrame, text_col: str, id_col: str,
@@ -249,23 +252,16 @@ def save_bm25_index(docs: DataFrame, path: str,
                                              / BM25_DOCS_PER_PARTITION))
     else:
         n_docs = None
-    # zstd for the standing artifact (r14 directive #4, guide §6):
-    # measurably smaller index files at similar read speed — the
-    # term-sorted layout's row-group min/max pruning is codec-agnostic
-    # (the read side decompresses only the row groups the term-isin
-    # filter keeps).  Codec env-tunable; "zstd" is the documented
-    # production default, A/B'd at 2M docs in BENCH_FULL_r15_bm25_*.
-    codec = os.environ.get("SPARK_GRAFT_BM25_INDEX_CODEC", "zstd")
     (_save_postings_frame(docs, text_col, id_col, num_partitions)
-     .write.option("compression", codec)
+     .write.option("compression", BM25_INDEX_CODEC)
      .parquet(f"{path}/postings", mode="overwrite"))
     t1 = _time.perf_counter()
     doc_lengths(docs, text_col, id_col) \
-        .write.option("compression", codec) \
+        .write.option("compression", BM25_INDEX_CODEC) \
         .parquet(f"{path}/lengths", mode="overwrite")
     t2 = _time.perf_counter()
     term_df(spark.read.parquet(f"{path}/postings")) \
-        .write.option("compression", codec) \
+        .write.option("compression", BM25_INDEX_CODEC) \
         .parquet(f"{path}/term_df", mode="overwrite")
     t3 = _time.perf_counter()
     if stage_timings is not None:

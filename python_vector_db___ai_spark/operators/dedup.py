@@ -29,13 +29,18 @@ proven row-equal to their kept expression forms in
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from python_vector_db___ai_spark.functions.hashing import md5_hex, stable_hash64
 from python_vector_db___ai_spark.functions.vector import cosine_similarity
+
+# Per-worker bound on the MinHash shingle-hash cache.  At ~200 B/entry
+# (50-100 B shingle key + int + dict slot), 2^18 entries is ~50 MB per
+# Python worker → ~1.6 GB across local[32], which fits beside the 8 GB
+# JVM heap the bench runs with.  (2^20 would permit ~6 GB aggregate
+# Python RSS on wide-vocabulary corpora.)
+SHINGLE_CACHE_MAX = 1 << 18
 
 
 def words_col(text: Column) -> Column:
@@ -178,14 +183,6 @@ def minhash_signature(df: DataFrame, num_hashes: int = 16,
     A = np.array([a for a, _ in consts], dtype=np.int64)
     B = np.array([b for _, b in consts], dtype=np.int64)
     hash_cache: dict[str, int] = {}
-    # Cache bound: at ~200 B/entry (50-100 B shingle key + int + dict
-    # slot), 2^18 entries is ~50 MB per Python worker → ~1.6 GB across
-    # local[32], which fits beside the 8 GB JVM heap the bench runs
-    # with.  (2^20 would permit ~6 GB aggregate Python RSS on
-    # wide-vocabulary corpora — r8 ADVICE.)  Env-tunable for clusters
-    # with more per-executor Python headroom.
-    cache_max = int(os.environ.get("SPARK_GRAFT_SHINGLE_CACHE",
-                                   str(1 << 18)))
 
     sh_col = "sh64" if hashed_shingles else "shingles"
     sh_type = "array<bigint>" if hashed_shingles else "array<string>"
@@ -224,7 +221,7 @@ def minhash_signature(df: DataFrame, num_hashes: int = 16,
                 continue
             sh_lists = [word_shingles_py(t, shingle_n)
                         for t in pdf[text_col]]
-            if len(hash_cache) > cache_max:   # bound worker memory
+            if len(hash_cache) > SHINGLE_CACHE_MAX:   # bound worker memory
                 hash_cache.clear()
             flat: list[int] = []
             append = flat.append
@@ -702,23 +699,6 @@ def minhash_lsh_pairs(df: DataFrame, num_hashes: int = 16, bands: int = 4,
     if verify_threshold is not None:
         out = out.filter(F.col("jaccard") >= verify_threshold)
     return out
-
-
-def simhash_col(text: Column, bits: int = 16) -> Column:
-    """SimHash fingerprint of the word multiset — inline expression form
-    (sign of per-bit +-1 sums over word hashes).  For the aggregated
-    (explode + groupBy) form that scales to long documents, see
-    :func:`simhash_fingerprints`."""
-    ws = words_col(text)
-    def bit_sum(j: int) -> Column:
-        return F.aggregate(
-            ws, F.lit(0),
-            lambda acc, w: acc + F.when(
-                stable_hash64(w).bitwiseAND(F.lit(1 << j)) > 0, 1).otherwise(-1))
-    return sum(
-        (F.when(bit_sum(j) > 0, F.lit(1 << j)).otherwise(F.lit(0)) for j in range(bits)),
-        F.lit(0),
-    ).cast("long")
 
 
 def simhash_fingerprints(df: DataFrame, bits: int = 16,

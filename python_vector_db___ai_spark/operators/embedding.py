@@ -137,23 +137,6 @@ def embed_with_cache(docs: DataFrame, cache: DataFrame,
             .drop("_key", "_cached"))
 
 
-def embedding_stats(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """V8: summary statistics of vector norms and components
-    (day_10/embedders/embedding_pipeline.py:427-458)."""
-    from python_vector_db___ai_spark.functions.vector import vec_norm
-
-    with_norm = df.select(vec_norm(F.col(vec_col)).alias("nrm"),
-                          F.col(vec_col))
-    return with_norm.agg(
-        F.count("*").cast("long").alias("n_vectors"),
-        F.round(F.avg("nrm"), 6).alias("avg_norm"),
-        F.round(F.min("nrm"), 6).alias("min_norm"),
-        F.round(F.max("nrm"), 6).alias("max_norm"),
-        F.round(F.avg(F.aggregate(F.col(vec_col), F.lit(0.0),
-                                  lambda a, x: a + x.cast("double"))
-                      / F.size(vec_col)), 6).alias("avg_component_mean"))
-
-
 def quantize_int8(df: DataFrame, vec_col: str = "embedding",
                   round_to: int = 6) -> DataFrame:
     """Per-vector absmax int8 quantization with reconstruction-error

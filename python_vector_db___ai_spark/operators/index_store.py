@@ -16,8 +16,8 @@ artifact with an explicit save/load path:
   This is the same split hnswlib's ``save_index``/``load_index``
   provides, re-expressed as a parquet table so a 1000-executor
   cluster reads its own partitions' graphs with partition pruning.
-* **SRP / sketch / PQ**: the DataFrame halves of those indexes
-  (bucket frames, sketch columns, code columns) are already parquet-
+* **sketch / PQ**: the DataFrame halves of those indexes
+  (sketch columns, code columns) are already parquet-
   writable; what was missing is the small dense half — hyperplane
   matrices and codebooks — which ``save_matrix``/``load_matrix`` and
   ``save_pq_model``/``load_pq_model`` round-trip losslessly
@@ -485,7 +485,7 @@ def ivf_append(batch: DataFrame, centroids: DataFrame, path: str,
 
 
 def save_matrix(spark: SparkSession, M, path: str) -> None:
-    """Persist a small dense float64 matrix (SRP/sketch hyperplanes)
+    """Persist a small dense float64 matrix (sketch hyperplanes)
     as ``(i, vals)`` rows — bit-exact through parquet DOUBLE."""
     rows = [(i, [float(x) for x in M[i]]) for i in range(len(M))]
     (spark.createDataFrame(rows, "i int, vals array<double>")

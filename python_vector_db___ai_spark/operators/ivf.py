@@ -117,17 +117,15 @@ def ivf_search(queries: DataFrame, corpus: DataFrame,
                corpus_id: str = "id", corpus_vec: str = "embedding",
                cluster_col: str = "label",
                round_to: int | None = 6,
-               impl: str = "pruned-blas",
                dedup_candidates: bool = False) -> DataFrame:
     """IVF search: probe -> prune (equi-join on cluster) -> exact score
     within the probed clusters -> per-query top-k.
 
     Scans ~``nprobe/nlist`` of the corpus; with the corpus partitioned
-    by ``cluster_col`` the pruning happens at the scan.  ``impl="blas"``
-    scores the pruned candidate pairs with a vectorized NumPy kernel
-    and keeps local top-k before the final merge (same trick as
-    ``search.knn_join_blas``, identical results); ``impl="expr"`` stays
-    pure-expression.
+    by ``cluster_col`` the pruning happens at the scan.  Each Arrow
+    batch of the pruned scan is scored against its cluster's probing
+    queries with one NumPy matmul, keeping local top-k before the final
+    merge (same trick as ``search.knn_join_blas``, identical results).
 
     ``dedup_candidates=True`` drops duplicate (query, candidate) pairs
     before ranking — required when the corpus was spill-assigned to
@@ -141,41 +139,21 @@ def ivf_search(queries: DataFrame, corpus: DataFrame,
         F.col("score").desc() if desc_order else F.col("score").asc(),
         F.col(corpus_id).asc())
 
-    if impl == "pruned-blas":
-        # The probe table is driver-small by contract (it gets
-        # collected either way); for the cosine quantizer compute it
-        # directly on the driver — same rounding + (score desc,
-        # cluster asc) tie-break as probe_clusters — turning the
-        # probe crossJoin + window + collect (two Spark jobs) into
-        # one numpy matmul, so the whole search is a single job.
-        if metric == "cosine":
-            probe_rows = _probe_rows_driver(
-                queries, centroids, nprobe, query_id, query_vec,
-                cluster_col, round_to)
-        else:
-            probe_rows = None
-        scored = _pruned_matmul_topk(
-            probe_clusters(queries, centroids, nprobe, metric, query_id,
-                           query_vec, cluster_col, round_to)
-            if probe_rows is None else probe_rows,
-            corpus, k, metric, query_id, query_vec,
-            corpus_id, corpus_vec, cluster_col, round_to or 6, desc_order)
-    elif impl == "blas":
-        probes = probe_clusters(queries, centroids, nprobe, metric,
-                                query_id, query_vec, cluster_col, round_to)
-        cand = corpus.join(F.broadcast(probes), cluster_col)
-        scored = _score_pairs_blas(
-            cand.select(query_id, corpus_id, query_vec, corpus_vec),
-            k, metric, query_id, query_vec, corpus_id, corpus_vec,
-            round_to or 6, desc_order)
+    # The probe table is driver-small by contract (it gets collected
+    # either way); for the cosine quantizer compute it directly on the
+    # driver — same rounding + (score desc, cluster asc) tie-break as
+    # probe_clusters — turning the probe crossJoin + window + collect
+    # (two Spark jobs) into one numpy matmul, so the whole search is a
+    # single job.
+    if metric == "cosine":
+        probes = _probe_rows_driver(queries, centroids, nprobe, query_id,
+                                    query_vec, cluster_col, round_to)
     else:
         probes = probe_clusters(queries, centroids, nprobe, metric,
                                 query_id, query_vec, cluster_col, round_to)
-        cand = corpus.join(F.broadcast(probes), cluster_col)
-        score, _ = score_column(metric, F.col(query_vec), F.col(corpus_vec))
-        if round_to is not None:
-            score = F.round(score, round_to)
-        scored = cand.withColumn("score", score)
+    scored = _pruned_matmul_topk(
+        probes, corpus, k, metric, query_id, query_vec,
+        corpus_id, corpus_vec, cluster_col, round_to or 6, desc_order)
     if dedup_candidates:
         # Scores of duplicates are identical (same rounded kernel), so
         # any one row per (query, candidate) is the right survivor.
@@ -205,8 +183,7 @@ def _probe_rows_driver(queries: DataFrame, centroids: DataFrame,
 
     qrows = collect_small(
         queries.select(query_id, query_vec), "ivf_search queries",
-        hint="Query batches are small by contract; batch the queries "
-             "or use impl='expr' for a fully distributed plan.")
+        hint="Query batches are small by contract; batch the queries.")
     crows = sorted(collect_small(
         centroids, "ivf_search centroids",
         hint="nlist must stay driver-small."), key=lambda r: r[cluster_col])
@@ -258,7 +235,7 @@ def _pruned_matmul_topk(probes, corpus: DataFrame, k: int,
         probe_rows = collect_small(
             probes, "ivf_search probe table",
             hint="nprobe x n_queries must stay driver-small; batch the "
-                 "queries or use impl='expr' for a fully distributed plan.")
+                 "queries.")
     else:
         probe_rows = probes
     by_label: dict = {}
@@ -421,8 +398,7 @@ def assign_clusters(corpus: DataFrame, centroids: DataFrame,
                     spill: int = 1, metric: str = "cosine",
                     id_col: str = "vec_id", vec_col: str = "embedding",
                     cluster_col: str = "cluster_id",
-                    round_to: int | None = 6,
-                    impl: str = "blas") -> DataFrame:
+                    round_to: int | None = 6) -> DataFrame:
     """Assign each corpus vector to its ``spill`` nearest centroids —
     IVF list assignment with replication.  ``spill > 1`` is the
     standard boundary-pair recall fix: storage grows ``spill``×, and
@@ -430,23 +406,15 @@ def assign_clusters(corpus: DataFrame, centroids: DataFrame,
     Returns ``(id_col, vec_col, cluster_col)`` with ``spill`` rows per
     vector; write it partitioned by ``cluster_col`` for pruning.
 
-    ``impl="blas"`` (default) scores each Arrow batch against the
-    broadcast centroid matrix in one matmul — the corpus-sized pass
-    must not go through interpreted per-row lambda expressions.
-    ``impl="expr"`` keeps the pure-Column path (used where the DuckDB
-    oracle replays the assignment).
+    Each Arrow batch is scored against the broadcast centroid matrix in
+    one matmul — the corpus-sized pass must not go through interpreted
+    per-row lambda expressions.
     """
-    if impl == "expr":
-        return probe_clusters(
-            corpus.select(F.col(id_col), F.col(vec_col)),
-            centroids, nprobe=spill, metric=metric, query_id=id_col,
-            query_vec=vec_col, cluster_col=cluster_col, round_to=round_to)
-
     import numpy as np
     import pandas as pd
 
     if metric != "cosine":
-        raise ValueError("blas assignment currently implements cosine only")
+        raise ValueError("assign_clusters implements cosine only")
     from python_vector_db___ai_spark.operators._guards import collect_small
 
     crows = sorted(collect_small(
@@ -474,8 +442,8 @@ def assign_clusters(corpus: DataFrame, centroids: DataFrame,
             if round_to is not None:
                 S = np.round(S, round_to)
             # stable argsort on -S: ties resolve to the lower cluster id
-            # because C_ rows are sorted by id — same tie-break as the
-            # expression path's (score desc, cluster asc) window.
+            # because C_ rows are sorted by id — same (score desc,
+            # cluster asc) tie-break as probe_clusters.
             order = np.argsort(-S, axis=1, kind="stable")[:, :spill]
             m = order.shape[1]
             yield pd.DataFrame({

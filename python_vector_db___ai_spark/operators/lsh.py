@@ -1,34 +1,21 @@
-"""LSH / binary-sketch approximate nearest neighbors (SURVEY §2.9
-X3/X4 substitute).
+"""Binary-sketch approximate nearest neighbors (SURVEY §2.9 X3/X4
+substitute).
 
 HNSW has no distributed equivalent (SURVEY §7 hard parts); the scale
-substitutes below keep the 100-TB self-join linear-ish by bounding the
-candidate set per query *by construction*:
+substitute here bounds the candidate set per query *by construction*.
+:func:`sketch_knn` keeps a wide (e.g. 256-bit) sign-random-projection
+**sketch** per vector, pre-ranks by Hamming distance, and scores exactly
+only the global top-``L`` candidates per query.  The Hamming pass reads
+``n_bits/8`` bytes per row (flat ``_sk0..`` bigint columns, not the
+vector) and reduces to one 0/1 matmul per Arrow batch with local top-L,
+so the shuffle carries ``n_queries × L`` rows per partition; the exact
+(full-vector) scan fraction is exactly ``L / n`` — the same candidate
+accounting ``ivf_scan_frac`` uses.  On the unstructured sf0.1 corpus
+this reaches recall ~0.96 at a 10% exact scan.
 
-* :func:`srp_lsh_knn` — sign-random-projection (hyperplane) LSH:
-  seeded hyperplanes, one Arrow pass for bucket keys, candidate
-  equi-join on ``(table, bucket)`` with a hot-bucket cap, exact BLAS
-  re-rank.  ``n_probes`` enables **query-directed multi-probe** (Lv et
-  al., VLDB'07): each query also probes the neighboring buckets
-  reached by flipping its lowest-|margin| sign bits, ranked by the
-  summed margin of the flipped bits — recall per probed bucket is far
-  better than adding independent hash tables.
-* :func:`sketch_knn` — the high-recall tier: a wide (e.g. 256-bit)
-  SRP **sketch** per vector, Hamming-distance pre-ranking, and exact
-  scoring of only the global top-``L`` candidates per query.  The
-  Hamming pass reads ``n_bits/8`` bytes per row (flat ``_sk0..``
-  bigint columns, not the vector) and reduces to one 0/1 matmul per
-  Arrow batch with local top-L, so the shuffle carries
-  ``n_queries × L`` rows per partition;
-  the exact (full-vector) scan fraction is exactly ``L / n`` — the
-  same candidate accounting ``ivf_scan_frac`` uses.  On the
-  unstructured sf0.1 corpus this reaches recall ~0.96 at a 10% exact
-  scan where bucket LSH plateaus near 0.73 at 29%.
-
-The MLlib ``BucketedRandomProjectionLSH`` wrappers remain for parity;
-hyperplanes are engine-internal in all three paths, so LSH checks are
-rows-only (no SQL oracle) and recall is measured against the exact
-scan by ``operators.ivf.recall_against_exact``.
+The hyperplanes are engine-internal, so sketch checks are rows-only (no
+SQL oracle) and recall is measured against the exact scan by
+``operators.ivf.recall_against_exact``.
 """
 
 from __future__ import annotations
@@ -50,181 +37,6 @@ def _infer_dim(df: DataFrame, vec_col: str, dim: int | None) -> int:
             f"cannot infer vector dim from empty {vec_col!r}; pass dim=")
     return len(row[0][0])
 
-
-def _srp_bucket_frame(df: DataFrame, H, n_tables: int, n_bits: int,
-                      id_col: str, vec_col: str) -> DataFrame:
-    """One Arrow pass: (id, table, bucket) rows, one row per hash
-    table.  ``bucket`` packs the sign bits of the table's hyperplane
-    projections into an int."""
-    import numpy as np
-    import pandas as pd
-
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast(H)
-    pw = (1 << np.arange(n_bits)).astype(np.int64)
-
-    def op(batches):
-        Hm = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            bits = (V @ Hm.T) > 0
-            out = []
-            for t in range(n_tables):
-                keys = bits[:, t * n_bits:(t + 1) * n_bits] @ pw
-                out.append(pd.DataFrame({
-                    id_col: pdf[id_col],
-                    "table": np.full(len(keys), t, dtype=np.int32),
-                    "bucket": keys}))
-            yield pd.concat(out, ignore_index=True)
-
-    return df.select(id_col, vec_col).mapInPandas(
-        op, schema=f"{id_col} long, table int, bucket long")
-
-
-def _srp_probe_frame(df: DataFrame, H, n_tables: int, n_bits: int,
-                     n_probes: int, probe_bits: int,
-                     id_col: str, vec_col: str) -> DataFrame:
-    """Query-side bucket frame with multi-probe expansion.
-
-    Per query: for each table, enumerate the ``2**probe_bits``
-    perturbations of the ``probe_bits`` lowest-|margin| sign bits, cost
-    = sum of flipped |margin|; rank ALL perturbations across tables by
-    cost and keep the global top ``n_probes`` — the query-directed
-    probing sequence, so the probe budget concentrates where the hash
-    is least certain.  Emits ``n_probes`` (id, table, bucket) rows per
-    query.
-    """
-    import numpy as np
-    import pandas as pd
-
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast(H)
-    pw = (1 << np.arange(n_bits)).astype(np.int64)
-    m = min(probe_bits, n_bits)
-    # SEL[mask, j] = 1 iff perturbation `mask` flips the j-th
-    # lowest-margin bit — input-independent, built once.
-    masks = np.arange(1 << m, dtype=np.int64)
-    SEL = ((masks[:, None] >> np.arange(m)[None, :]) & 1).astype(np.float64)
-    tbl_of = np.repeat(np.arange(n_tables, dtype=np.int32), 1 << m)
-
-    def op(batches):
-        Hm = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            P = V @ Hm.T                          # (rows, n_tables*n_bits)
-            bits = P > 0
-            ids = pdf[id_col].to_numpy()
-            out_id, out_t, out_b = [], [], []
-            for r in range(len(V)):
-                marg = np.abs(P[r]).reshape(n_tables, n_bits)
-                base = (bits[r].reshape(n_tables, n_bits) @ pw)  # (T,)
-                o = np.argsort(marg, axis=1, kind="stable")[:, :m]
-                costs = np.take_along_axis(marg, o, axis=1)      # (T, m)
-                # all perturbations of all tables in two matmuls
-                cand_cost = (costs @ SEL.T).ravel()              # (T*2^m,)
-                deltas = (pw[o].astype(np.float64) @ SEL.T) \
-                    .astype(np.int64)                            # (T, 2^m)
-                cand_key = (base[:, None] ^ deltas).ravel()
-                order = np.argsort(cand_cost, kind="stable")[:n_probes]
-                out_id.append(np.full(len(order), ids[r]))
-                out_t.append(tbl_of[order])
-                out_b.append(cand_key[order])
-            yield pd.DataFrame({
-                id_col: np.concatenate(out_id),
-                "table": np.concatenate(out_t),
-                "bucket": np.concatenate(out_b)})
-
-    return df.select(id_col, vec_col).mapInPandas(
-        op, schema=f"{id_col} long, table int, bucket long")
-
-
-def srp_build(corpus: DataFrame, n_tables: int = 8, n_bits: int = 12,
-              seed: int = 42, corpus_id: str = "vec_id",
-              vec_col: str = "embedding", dim: int | None = None):
-    """Build the SRP index: seeded hyperplanes + the corpus bucket
-    frame.  Cache (or write partitioned by ``(table, bucket)``) and
-    reuse across query batches — the build amortizes exactly like the
-    reference's index construction.  Pass ``dim`` to keep composition
-    fully lazy (otherwise one bounded row lookup infers it, raising
-    cleanly on an empty corpus)."""
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    d = _infer_dim(corpus, vec_col, dim)
-    H = rng.standard_normal((n_tables * n_bits, d))
-    cb = _srp_bucket_frame(corpus, H, n_tables, n_bits, corpus_id, vec_col)
-    return H, cb
-
-
-def srp_lsh_knn(queries: DataFrame, corpus: DataFrame, k: int = 10,
-                n_tables: int = 8, n_bits: int = 12, seed: int = 42,
-                metric: str = "cosine", max_bucket: int | None = 2048,
-                n_probes: int | None = None, probe_bits: int = 4,
-                query_id: str = "query_id", query_vec: str = "query_vec",
-                corpus_id: str = "vec_id", vec_col: str = "embedding",
-                round_to: int = 6, prebuilt=None,
-                dim: int | None = None) -> DataFrame:
-    """Approximate per-query top-k via sign-random-projection LSH.
-
-    Plan shape: two narrow bucket scans -> equi-join on
-    ``(table, bucket)`` -> distinct candidates -> vector joins -> BLAS
-    re-rank.  ``max_bucket`` drops buckets larger than the cap before
-    the join (the stop-shingle trick), so candidate fan-out per query
-    is at most ``probes × max_bucket`` regardless of skew.  Queries
-    whose buckets are all dropped return < k rows — the caller decides
-    whether to fall back to the exact scan for those.
-
-    ``n_probes``: total probe buckets per query across all tables
-    (query-directed multi-probe).  ``None`` = classic one-bucket-per-
-    table probing (``n_tables`` probes).  ``probe_bits`` bounds the
-    perturbation depth (lowest-|margin| bits eligible for flipping).
-
-    ``prebuilt``: an ``(H, corpus_bucket_frame)`` pair from
-    :func:`srp_build` — pass it to amortize the corpus bucket pass
-    across query batches.
-    """
-    from python_vector_db___ai_spark.operators.ivf import _score_pairs_blas
-
-    if prebuilt is not None:
-        H, cb = prebuilt
-    else:
-        H, cb = srp_build(corpus, n_tables, n_bits, seed, corpus_id, vec_col,
-                          dim=dim)
-    if n_probes is None:
-        qb = _srp_bucket_frame(queries, H, n_tables, n_bits,
-                               query_id, query_vec)
-    else:
-        qb = _srp_probe_frame(queries, H, n_tables, n_bits, n_probes,
-                              probe_bits, query_id, query_vec)
-    if max_bucket is not None:
-        sizes = (cb.groupBy("table", "bucket")
-                 .agg(F.count("*").alias("_bn"))
-                 .filter(F.col("_bn") <= max_bucket)
-                 .select("table", "bucket"))
-        cb = cb.join(sizes, ["table", "bucket"])
-    cand = (qb.join(cb, ["table", "bucket"])
-            .select(query_id, corpus_id)
-            .distinct())
-    pairs = (cand
-             .join(queries.select(query_id, query_vec), query_id)
-             .join(corpus.select(F.col(corpus_id), F.col(vec_col)
-                                 .alias("_cvec")), corpus_id))
-    desc = metric in ("cosine", "inner_product", "euclidean_similarity")
-    scored = _score_pairs_blas(
-        pairs.select(query_id, corpus_id, query_vec, "_cvec"),
-        k, metric, query_id, query_vec, corpus_id, "_cvec", round_to, desc)
-    from python_vector_db___ai_spark.operators._ranking import topk_window
-
-    return topk_window(scored, k, query_id, corpus_id, desc=desc)
-
-
-# ---------------------------------------------------------------------------
-# Binary-sketch Hamming filter (the high-recall approximate tier)
-# ---------------------------------------------------------------------------
 
 def _pack_bits(bits):
     """(rows, n_bits) bool -> (rows, n_bits//64) int64, little-endian
@@ -325,8 +137,7 @@ def sketch_knn(queries: DataFrame, corpus: DataFrame, k: int = 10,
 
     qrows = collect_small(
         queries.select(query_id, query_vec), "sketch_knn queries",
-        hint="Batch the query set, or use the bucketed srp_lsh_knn for "
-             "query-corpus joins of this size.")
+        hint="Batch the query set.")
     if not qrows:
         return corpus.sparkSession.createDataFrame(
             [], f"{query_id} long, {corpus_id} long, score double, "
@@ -383,100 +194,3 @@ def sketch_knn(queries: DataFrame, corpus: DataFrame, k: int = 10,
     from python_vector_db___ai_spark.operators._ranking import topk_window
 
     return topk_window(scored, k, query_id, corpus_id, desc=desc)
-
-
-def brp_lsh_join(a: DataFrame, b: DataFrame, threshold: float,
-                 vec_col: str = "embedding", id_col: str = "vec_id",
-                 bucket_length: float = 2.0, num_hash_tables: int = 3,
-                 seed: int = 42) -> DataFrame:
-    """Approximate L2 similarity join: pairs with distance < threshold.
-    Returns ``(id_a, id_b, l2_dist)`` with ``id_a < id_b``."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    fa = a.withColumn("_f", array_to_vector(F.col(vec_col).cast("array<double>")))
-    fb = b.withColumn("_f", array_to_vector(F.col(vec_col).cast("array<double>")))
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="_f", outputCol="_h", bucketLength=bucket_length,
-        numHashTables=num_hash_tables, seed=seed).fit(fa)
-    joined = lsh.approxSimilarityJoin(fa, fb, threshold, distCol="l2_dist")
-    return (joined
-            .select(F.col(f"datasetA.{id_col}").alias("id_a"),
-                    F.col(f"datasetB.{id_col}").alias("id_b"),
-                    F.round("l2_dist", 6).alias("l2_dist"))
-            .filter(F.col("id_a") < F.col("id_b")))
-
-
-def estimate_knn_radius(corpus: DataFrame, k: int = 10,
-                        vec_col: str = "embedding",
-                        id_col: str = "vec_id",
-                        sample_rows: int = 256) -> float:
-    """Estimate an L2 radius that captures ~k neighbors per point: the
-    distance to the k-th *other* neighbor, averaged over a small
-    deterministic sample, inflated 1.5×.  One tiny driver-side kernel —
-    the number parameterizes the bounded similarity join below.
-
-    Self-distances (the zero diagonal) are excluded before taking the
-    k-th order statistic, and the result is clamped to a positive
-    floor so a degenerate sample (duplicates, a single row) cannot
-    collapse the downstream join threshold to 0 and silently return
-    nothing.
-    """
-    import numpy as np
-
-    rows = (corpus.select(id_col, vec_col).orderBy(id_col)
-            .limit(sample_rows).collect())
-    V = np.array([r[vec_col] for r in rows], dtype=np.float64)
-    if len(V) < 2:
-        return 1.0
-    sq = ((V[:, None, :] - V[None, :, :]) ** 2).sum(-1)
-    np.fill_diagonal(sq, np.inf)          # k-th OTHER neighbor
-    idx = min(k - 1, len(V) - 2)          # 0-based k-th excluding self
-    kth = np.sqrt(np.partition(sq, idx, axis=1)[:, idx])
-    kth = kth[np.isfinite(kth)]
-    radius = float(np.mean(kth) * 1.5) if len(kth) else 0.0
-    return max(radius, 1e-6)
-
-
-def brp_lsh_knn(queries: DataFrame, corpus: DataFrame, k: int = 10,
-                vec_col: str = "embedding", query_id: str = "query_id",
-                query_vec: str = "query_vec", corpus_id: str = "vec_id",
-                bucket_length: float | None = None,
-                num_hash_tables: int = 3,
-                threshold: float | None = None,
-                seed: int = 42) -> DataFrame:
-    """Approximate per-query top-k under L2 via a *bounded*
-    approxSimilarityJoin + window, comparable row shape to
-    ``search.knn_join``.
-
-    The join threshold is always finite: given ``None`` it derives from
-    the sampled k-th-neighbor radius (:func:`estimate_knn_radius`), so
-    bucket-cohabiting pairs beyond the radius are pruned inside the
-    join instead of materialized — an unbounded (inf) threshold turns
-    a skewed bucket into quadratic fan-out at scale.  ``bucket_length``
-    defaults to the same radius (the E2LSH w ≈ search radius rule).
-    """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.sql import Window
-
-    if threshold is None:
-        threshold = estimate_knn_radius(corpus, k, vec_col, corpus_id)
-    if bucket_length is None:
-        bucket_length = threshold
-    fq = queries.withColumn(
-        "_f", array_to_vector(F.col(query_vec).cast("array<double>")))
-    fc = corpus.withColumn(
-        "_f", array_to_vector(F.col(vec_col).cast("array<double>")))
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="_f", outputCol="_h", bucketLength=bucket_length,
-        numHashTables=num_hash_tables, seed=seed).fit(fc)
-    joined = lsh.approxSimilarityJoin(fq, fc, threshold, distCol="score")
-    w = Window.partitionBy(f"datasetA.{query_id}").orderBy(
-        F.col("score").asc(), F.col(f"datasetB.{corpus_id}").asc())
-    return (joined
-            .withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .select(F.col(f"datasetA.{query_id}").alias(query_id),
-                    F.col(f"datasetB.{corpus_id}").alias(corpus_id),
-                    F.round("score", 6).alias("score"), "rank"))

@@ -15,10 +15,6 @@ def formatted_plan(df: DataFrame) -> str:
         df._jdf.queryExecution(), "formatted")
 
 
-def simple_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def scan_read_schemas(df: DataFrame) -> list[str]:
     """ReadSchema clauses of every file scan — column-pruning witness."""
     return [line.split("ReadSchema:", 1)[1].strip()
@@ -48,7 +44,3 @@ def count_exchanges(df: DataFrame) -> int:
 def has_broadcast_join(df: DataFrame) -> bool:
     return ("BroadcastHashJoin" in formatted_plan(df)
             or "BroadcastNestedLoopJoin" in formatted_plan(df))
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    return formatted_plan(df).count("WholeStageCodegen")

@@ -247,12 +247,7 @@ FROM exact GROUP BY query_id
         "them from the exact scan.  The PRODUCTION-beam (ef=64) hnsw "
         "recall stays measured in the bench ann/scale sweeps at every "
         "factor, and production-beam row-fidelity is asserted by "
-        "hnsw_index_lifecycle's matches_inflight.  The query-directed "
-        "multi-probe bucket-LSH tier (Lv et "
-        "al. VLDB'07) stays demoted to the bench ANN section: on this "
-        "corpus it needs a ~29% candidate fraction for 0.73 recall, "
-        "strictly dominated — measured there, not a registered quality "
-        "claim.",
+        "hnsw_index_lifecycle's matches_inflight.",
 )
 def lsh_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from python_vector_db___ai_spark.operators.index_store import (

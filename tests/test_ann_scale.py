@@ -1,5 +1,5 @@
-"""Tests for the scale-path ANN operators added in round 2: SRP-LSH
-kNN, spill-assigned KMeans IVF, and the blocked (no-θ-join) near-dup
+"""Tests for the scale-path ANN operators: spill-assigned KMeans IVF,
+the binary-sketch tier, and the blocked (no-θ-join) near-dup
 variants."""
 
 from __future__ import annotations
@@ -18,7 +18,6 @@ from python_vector_db___ai_spark.operators.ivf import (
     ivf_search,
     kmeans_centroids,
 )
-from python_vector_db___ai_spark.operators.lsh import srp_lsh_knn
 from python_vector_db___ai_spark.session import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -34,26 +33,6 @@ def queries(emb):
     return (emb.filter(F.col("vec_id") < 10)
             .select(F.col("vec_id").alias("query_id"),
                     F.col("embedding").alias("query_vec")))
-
-
-def test_srp_lsh_self_hit(emb, queries):
-    """A query that IS a corpus vector collides with itself in every
-    table and must come back at rank 1 with cosine 1."""
-    got = srp_lsh_knn(queries, emb, k=5, n_tables=8, n_bits=4)
-    top = {r.query_id: r for r in got.filter(F.col("rank") == 1).collect()}
-    for qid, r in top.items():
-        assert r.vec_id == qid
-        assert r.score == pytest.approx(1.0, abs=1e-6)
-
-
-def test_srp_lsh_bucket_cap_bounds_candidates(emb, queries):
-    """With a tiny hot-bucket cap the candidate set (and so the result)
-    shrinks — the cap is a hard bound on per-bucket fan-out."""
-    free = srp_lsh_knn(queries, emb, k=10, n_tables=4, n_bits=2,
-                       max_bucket=None).count()
-    capped = srp_lsh_knn(queries, emb, k=10, n_tables=4, n_bits=2,
-                         max_bucket=1).count()
-    assert capped < free
 
 
 def test_simhash_blocked_equals_naive(spark):
@@ -176,24 +155,6 @@ def test_sketch_knn_pruned_self_hit_and_bounds(emb, queries):
     assert all(len(v) <= 20 for v in by_q.values())
 
 
-def test_multiprobe_improves_recall_at_fixed_tables(emb, queries):
-    """Query-directed multi-probe finds at least as many true
-    neighbors as base probing with the same tables/bits."""
-    from python_vector_db___ai_spark.operators.search import knn_join_blas
-
-    exact = knn_join_blas(queries, emb, k=5, metric="cosine",
-                          corpus_id="vec_id")
-    truth = {(r.query_id, r.vec_id) for r in exact.collect()}
-
-    def hits(df):
-        return sum((r.query_id, r.vec_id) in truth for r in df.collect())
-
-    base = srp_lsh_knn(queries, emb, k=5, n_tables=4, n_bits=8)
-    probed = srp_lsh_knn(queries, emb, k=5, n_tables=4, n_bits=8,
-                         n_probes=40, probe_bits=4)
-    assert hits(probed) >= hits(base)
-
-
 def test_collect_small_guard_raises(emb):
     """Operators that collect a small-by-contract side fail fast with
     an actionable error instead of flooding the driver; under the cap
@@ -203,21 +164,6 @@ def test_collect_small_guard_raises(emb):
     with pytest.raises(ValueError, match="test side.*small side"):
         collect_small(emb, "test side", cap=5)
     assert len(collect_small(emb.limit(3), "test side", cap=5)) == 3
-
-
-def test_estimate_knn_radius_excludes_self_and_clamps(spark):
-    """The sampled radius ignores self-distance and never collapses to
-    zero on degenerate (duplicate-vector) corpora."""
-    from python_vector_db___ai_spark.operators.lsh import estimate_knn_radius
-
-    dup = spark.createDataFrame(
-        [(i, [1.0, 0.0]) for i in range(8)],
-        "vec_id long, embedding array<double>")
-    r = estimate_knn_radius(dup, k=3)
-    assert r > 0.0
-    one = spark.createDataFrame([(0, [1.0, 0.0])],
-                                "vec_id long, embedding array<double>")
-    assert estimate_knn_radius(one, k=3) > 0.0
 
 
 def test_sketch_knn_empty_queries_returns_empty(emb, queries):

@@ -1,13 +1,10 @@
 """Regression guards for bench-path plan shapes: BM25 stays one plan
-(no eager driver jobs while composing), SRP-LSH results are identical
-with and without a prebuilt index."""
+(no eager driver jobs while composing), and prebuilt BM25 indexes
+score identically to the fresh path."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from python_vector_db___ai_spark.operators.bm25 import bm25_scores
-from python_vector_db___ai_spark.operators.lsh import srp_build, srp_lsh_knn
 from python_vector_db___ai_spark.session import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -29,18 +26,6 @@ def test_bm25_compose_runs_no_jobs(spark):
 def test_bm25_empty_corpus_yields_empty(spark):
     empty = spark.createDataFrame([], "doc_id long, text string")
     assert bm25_scores(empty, ["anything"]).count() == 0
-
-
-def test_srp_prebuilt_matches_fresh(spark):
-    emb = load_table(spark, SF_DIR, "embeddings")
-    queries = (emb.filter(F.col("vec_id") < 5)
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("embedding").alias("query_vec")))
-    fresh = srp_lsh_knn(queries, emb, k=5, n_tables=6, n_bits=4).collect()
-    pre = srp_build(emb, n_tables=6, n_bits=4)
-    built = srp_lsh_knn(queries, emb, k=5, n_tables=6, n_bits=4,
-                        prebuilt=pre).collect()
-    assert sorted(map(tuple, fresh)) == sorted(map(tuple, built))
 
 
 def test_bm25_prebuilt_matches_fresh(spark):

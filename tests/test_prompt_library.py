@@ -47,7 +47,8 @@ def test_percent_in_template_is_literal(spark):
 
 
 def test_driver_priority_window_covers_unproven_entries():
-    """Registry ordering invariant (rotated each round): the driver
+    """Registry ordering invariant (derived from the committed
+    correctness artifacts by ``plans.queries.gate_order``): the gate
     samples the first 50 registry entries, so (a) DRIVER_PRIORITY must
     be exactly 50 known names with no duplicates, (b) the dict must
     lead with them, and (c) nothing past slot 50 may lack a green row
@@ -75,3 +76,25 @@ def test_driver_priority_window_covers_unproven_entries():
     missing = [q for q in qs[50:] if q not in prev]
     assert missing == [], (
         f"tail entries without a green row in {prev_path.name}: {missing}")
+
+
+def test_gate_order_oldest_evidence_first(tmp_path):
+    """Never-checked entries lead, then entries by the round of their
+    newest artifact row (numeric, oldest first); ties keep registry
+    order; with no artifact the registry order stands."""
+    import json
+
+    from python_vector_db___ai_spark.plans.queries import (
+        gate_order,
+        newest_rounds,
+    )
+
+    (tmp_path / "CORRECTNESS_r9.json").write_text(
+        json.dumps({"a": {}, "b": {}, "c": {}}))
+    (tmp_path / "CORRECTNESS_r10.json").write_text(
+        json.dumps({"b": {}, "d": {}}))
+    newest = newest_rounds(tmp_path)
+    assert newest == {"a": 9, "b": 10, "c": 9, "d": 10}
+    names = ["d", "b", "c", "a", "e", "f"]
+    assert gate_order(names, newest) == ["e", "f", "c", "a", "d", "b"]
+    assert gate_order(names, newest_rounds(tmp_path / "none")) == names

@@ -1,7 +1,8 @@
 """Dump ``explain("formatted")`` of registered queries to
-``plans/r15/<query>_<tag>.txt`` (optimization-round evidence).
+``plans/r<round>/<query>_<tag>.txt`` (optimization-round evidence).
 
-Usage: python tools/dump_r15_plans.py <before|after> [query ...]
+Usage: python tools/dump_round_plans.py <round> <before|after> [query ...]
+``<round>`` is the round number (``15`` writes ``plans/r15/``).
 Defaults to the bench HEADLINE list.
 """
 
@@ -20,18 +21,19 @@ os.environ.setdefault("SPARK_GRAFT_REBALANCE", "1")
 
 
 def main() -> None:
-    tag = sys.argv[1]
+    rnd = int(sys.argv[1])
+    tag = sys.argv[2]
     assert tag in ("before", "after"), "tag must be before|after"
     import bench
     from python_vector_db___ai_spark.plans.explain import formatted_plan
     from python_vector_db___ai_spark.plans.queries import all_queries
     from python_vector_db___ai_spark.session import get_spark
 
-    spark = get_spark("dump_r15_plans")
+    spark = get_spark(f"dump_r{rnd}_plans")
     spark.sparkContext.setLogLevel("ERROR")
     qs = all_queries()
-    names = sys.argv[2:] or bench.HEADLINE
-    outdir = ROOT / "plans" / "r15"
+    names = sys.argv[3:] or bench.HEADLINE
+    outdir = ROOT / "plans" / f"r{rnd}"
     outdir.mkdir(parents=True, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     for name in names:

@@ -41,6 +41,7 @@ sys.path.insert(0, str(ROOT))
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
 from python_vector_db___ai_spark.operators.bm25 import (  # noqa: E402
+    BM25_TERM_SALT,
     save_bm25_index,
 )
 from python_vector_db___ai_spark.session import get_spark  # noqa: E402
@@ -123,8 +124,7 @@ def main() -> None:
         "uniform_build_sec": med_u,
         "zipf_build_sec": med_z,
         "skew_over_uniform": round(med_z / med_u, 3),
-        "term_salt": int(os.environ.get("SPARK_GRAFT_BM25_TERM_SALT",
-                                        "8")),
+        "term_salt": BM25_TERM_SALT,
         "loadavg_start": loadavg_start,
         "loadavg_end": [round(x, 2) for x in os.getloadavg()],
         "git_head": head,
