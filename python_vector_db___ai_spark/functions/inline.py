@@ -95,6 +95,17 @@ def _render(v, typ: str) -> str:
         inner = t[6:-1]
         if len(v) == 0:
             return f"CAST(array() AS {_sql_type(t)})"
+        if inner in _FLOAT_TYPES and all(
+                x is not None and math.isfinite(x) for x in v):
+            # One JSON literal per vector, not one CAST per element:
+            # ``repr`` is the shortest round-trip form, so the parsed
+            # doubles are bit-identical (FLOAT narrows from the double,
+            # as the per-element CAST does).
+            js = "[" + ",".join(repr(float(x)) for x in v) + "]"
+            arr = f"from_json('{js}', 'array<double>')"
+            if inner == "double":
+                return arr
+            return f"CAST({arr} AS {_sql_type(t)})"
         return "array(" + ", ".join(_render(x, inner) for x in v) + ")"
     raise ValueError(f"inline_table: unsupported type {typ!r}")
 

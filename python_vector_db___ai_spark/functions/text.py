@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # --------------------------------------------------------------------------
-# Cleaning (F2-F5, day_10/utils/text_processor.py:67-134)
+# Cleaning (F2-F4, day_10/utils/text_processor.py:67-134)
 
 # Mojibake/encoding fix table (day_10/utils/text_processor.py:67-84).
 _ENCODING_FIXES = [
@@ -56,12 +56,6 @@ def fix_punctuation(c: Column) -> Column:
     c = F.regexp_replace(c, r"([.,;:!?])([A-Za-z])", r"$1 $2")
     c = F.regexp_replace(c, r"([!?]){2,}", r"$1")
     return c
-
-
-def strip_special_chars(c: Column, keep: str = r".,;:!?'\"()\-\n ") -> Column:
-    """F5: drop characters outside the allowed class
-    (day_10/utils/text_processor.py:99-109)."""
-    return F.regexp_replace(c, f"[^A-Za-z0-9{keep}]", "")
 
 
 def clean_text(c: Column) -> Column:

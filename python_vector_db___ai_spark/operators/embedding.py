@@ -8,10 +8,6 @@ and swaps in a deterministic mock when the model is unavailable
 * **mock embedder** — md5-derived pseudo-embedding as a pure Column
   expression: deterministic, hermetic, DuckDB-reproducible.  This is
   the default in this container (no model weights available).
-* **real embedder** — SCALAR_ITER pandas UDF that loads the model once
-  per executor and encodes Arrow batches (the Spark analog of
-  batch_size=32); gated behind an import so the engine works without
-  torch installed.
 * **cache** — a Delta/parquet table keyed ``(model, md5(text))``; the
   pipeline left-joins the cache, embeds only misses (J3), and unions
   the two sides — embedding compute scales with *new* data only.
@@ -21,7 +17,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from python_vector_db___ai_spark.functions.hashing import md5_hex, stable_hash64
 from python_vector_db___ai_spark.functions.vector import l2_normalize
@@ -78,34 +73,6 @@ def mock_embedding_sql(expr: str, dim: int = MOCK_DIM,
         return arr
     return (f"list_transform({arr}, "
             f"x -> x / sqrt(list_dot_product({arr}, {arr})))")
-
-
-def sentence_transformer_udf(model_name: str = "all-MiniLM-L6-v2"):
-    """V7 real-model embedder: SCALAR_ITER pandas UDF with a
-    once-per-executor model load.  Raises ImportError at *call* time if
-    sentence-transformers is absent (hermetic environments use
-    :func:`mock_embedding`)."""
-    import importlib.util
-
-    if importlib.util.find_spec("sentence_transformers") is None:
-        raise ImportError(
-            "sentence-transformers not installed; use mock_embedding "
-            "(the reference's mock switch, day_14/src/main.py:3-18)")
-
-    from typing import Iterator
-
-    import pandas as pd
-
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def embed(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        from sentence_transformers import SentenceTransformer
-
-        model = SentenceTransformer(model_name)   # once per worker
-        for batch in batches:
-            vecs = model.encode(batch.fillna("").tolist(), batch_size=32)
-            yield pd.Series(list(vecs))
-
-    return embed
 
 
 def cache_key(text: Column, model: str = "mock") -> Column:

@@ -16,8 +16,9 @@ Spark as a **table-layout choice, not an index structure**:
   (X6, day_6/day6_complete.py:249-263).
 
 Cluster assignments come either from an existing column (the test
-tables ship a ``label``) or from MLlib KMeans (:func:`kmeans_assign`,
-mirroring the FAISS quantizer training).
+tables ship a ``label``) or from the trained coarse quantizer:
+:func:`kmeans_centroids` (spherical k-means on a driver-side sample,
+mirroring the FAISS quantizer training) + :func:`assign_clusters`.
 """
 
 from __future__ import annotations
@@ -362,31 +363,107 @@ def recall_against_exact(approx: DataFrame, exact: DataFrame,
                     .alias("recall")))
 
 
+def _lloyd(X, n_codes: int, iters: int, seed: int):
+    """Seeded, fixed-iteration Lloyd's k-means (numpy, deterministic) —
+    the one quantizer trainer of the package: the IVF coarse quantizer
+    (:func:`kmeans_centroids`) and the PQ codebooks (``pq.pq_train``).
+    Returns (n_codes, dim) centroids.  The distance step is
+    ``||x||^2 + ||c||^2 - 2 X C^T`` — an n x n_codes matrix, never the
+    n x n_codes x dim broadcast.  Empty clusters re-seed from the
+    farthest points — the standard FAISS-style fixup, deterministic
+    because distances and indices are."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    n = len(X)
+    init = rng.choice(n, size=min(n_codes, n), replace=False)
+    C = X[np.sort(init)].copy()
+    if len(C) < n_codes:                      # tiny sample: pad with jitter
+        pad = X[rng.integers(0, n, n_codes - len(C))] + 1e-6
+        C = np.vstack([C, pad])
+    xx = np.einsum("ij,ij->i", X, X)
+    for _ in range(iters):
+        d = (xx[:, None] + np.einsum("ij,ij->i", C, C)[None, :]
+             - 2.0 * (X @ C.T))
+        assign = d.argmin(1)
+        empties = []
+        for c in range(n_codes):
+            members = X[assign == c]
+            if len(members):
+                C[c] = members.mean(0)
+            else:
+                empties.append(c)
+        if empties:
+            # each empty cluster re-seeds from a DISTINCT far point
+            # (farthest-first order) — seeding them all from the same
+            # argmax would collapse them into permanently-dead
+            # duplicate codes
+            far_order = np.argsort(-d.min(1), kind="stable")
+            for e, c in enumerate(empties):
+                C[c] = X[far_order[e % len(far_order)]]
+    return C
+
+
+def _vector_matrix(vecs, what: str):
+    """An Arrow list column of equal-length numeric vectors -> a
+    zero-copy ``(n, dim)`` numpy matrix of its storage type (``n > 0``).
+    ``flatten()`` honours a sliced array's offsets (``.values`` does
+    not).  A null or ragged vector raises ``ValueError``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(vecs, pa.ChunkedArray):
+        vecs = vecs.combine_chunks()
+    n = len(vecs)
+    flat = vecs.flatten()
+    if vecs.null_count or flat.null_count:
+        raise ValueError(f"{what}: null vector or vector element")
+    lens = pc.list_value_length(vecs)
+    dim = pc.min(lens).as_py()
+    if pc.max(lens).as_py() != dim:
+        raise ValueError(f"{what}: ragged vectors (lengths differ)")
+    return flat.to_numpy(zero_copy_only=False).reshape(n, dim)
+
+
 def kmeans_centroids(corpus: DataFrame, nlist: int = 10, seed: int = 42,
                      vec_col: str = "embedding",
                      cluster_col: str = "cluster_id",
                      max_iter: int = 8) -> DataFrame:
-    """Train the MLlib-KMeans coarse quantizer and return its centroids
-    as a ``(cluster_col, centroid array<double>)`` frame — the same
-    shape :func:`build_centroids` produces, so :func:`probe_clusters` /
+    """Train the IVF coarse quantizer and return its centroids as a
+    ``(cluster_col, centroid array<double>)`` frame — the same shape
+    :func:`build_centroids` produces, so :func:`probe_clusters` /
     :func:`ivf_search` work with either quantizer.
 
-    ``max_iter=8``: a coarse quantizer needs rough Voronoi structure,
-    not convergence — measured recall is identical to maxIter=20 on
-    the test corpora at a third of the fit cost.
+    Spherical k-means on the driver: :func:`_lloyd` (``max_iter``
+    iterations) over the L2-normalized vectors of a sample of
+    ``min(n, 256 * nlist, SMALL_SIDE_CAP)`` rows — FAISS's
+    train-on-sample rule, capped like every driver-small side.  Lloyd
+    over unit vectors optimizes the cosine objective that
+    :func:`assign_clusters` and the probe rank by.  The sample is a
+    seeded Bernoulli ``sample`` cut by ``limit``, collected as Arrow —
+    identical for the same input files, partitioning and ``seed``.
+    Only the count and the sample scan run Spark jobs.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    import numpy as np
 
-    feats = corpus.withColumn(
-        "_features", array_to_vector(F.col(vec_col).cast("array<double>")))
-    model = KMeans(k=nlist, seed=seed, maxIter=max_iter,
-                   featuresCol="_features", predictionCol="_p").fit(feats)
-    rows = [(int(i), [float(x) for x in c])
-            for i, c in enumerate(model.clusterCenters())]
-    # VALUES-inlined LocalRelation: the fitted centroids are
-    # deterministic (fixed seed over the same input), so the inlined
-    # rows canonicalize stably across rebuilds and downstream cached
+    from python_vector_db___ai_spark.operators._guards import SMALL_SIDE_CAP
+    from python_vector_db___ai_spark.operators.pq import _maybe_normalize
+
+    vecs = corpus.select(vec_col)
+    n = vecs.count()
+    m = min(n, 256 * nlist, SMALL_SIDE_CAP)
+    if m < n:
+        vecs = vecs.sample(fraction=m / n, seed=seed)
+    sample = vecs.limit(m).toArrow().column(0)
+    if len(sample) == 0:
+        raise ValueError("kmeans_centroids: empty corpus")
+    X = _maybe_normalize(_vector_matrix(sample, "kmeans_centroids")
+                         .astype(np.float64, copy=False), True)
+    C = _lloyd(X, nlist, max_iter, seed)
+    rows = [(i, [float(x) for x in c]) for i, c in enumerate(C)]
+    # VALUES-inlined LocalRelation: the centroids are deterministic
+    # (fixed seed over the same input), so the inlined rows
+    # canonicalize stably across rebuilds and downstream cached
     # frames (assignments, search results) stay matchable — an
     # RDD-backed literal here invalidated every dependent cache on
     # each rebuild (see functions/inline.py).
@@ -406,12 +483,13 @@ def assign_clusters(corpus: DataFrame, centroids: DataFrame,
     Returns ``(id_col, vec_col, cluster_col)`` with ``spill`` rows per
     vector; write it partitioned by ``cluster_col`` for pruning.
 
-    Each Arrow batch is scored against the broadcast centroid matrix in
-    one matmul — the corpus-sized pass must not go through interpreted
-    per-row lambda expressions.
+    Each Arrow batch is read as one ``(n, dim)`` matrix, scored against
+    the broadcast centroid matrix in one matmul, and emitted as flat
+    Arrow arrays — no per-row Python object on either side.  A null or
+    ragged vector raises ``ValueError`` in the task.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     if metric != "cosine":
         raise ValueError("assign_clusters implements cosine only")
@@ -430,10 +508,11 @@ def assign_clusters(corpus: DataFrame, centroids: DataFrame,
 
     def op(batches):
         cids_, C_, cn_ = bc.value
-        for pdf in batches:
-            if pdf.empty:
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            V = _vector_matrix(rb.column(1), "assign_clusters").astype(
+                np.float64, copy=False)
             vn = np.linalg.norm(V, axis=1)
             with np.errstate(divide="ignore", invalid="ignore"):
                 S = (V @ C_.T) / np.outer(vn, cn_)
@@ -446,31 +525,19 @@ def assign_clusters(corpus: DataFrame, centroids: DataFrame,
             # cluster asc) tie-break as probe_clusters.
             order = np.argsort(-S, axis=1, kind="stable")[:, :spill]
             m = order.shape[1]
-            yield pd.DataFrame({
-                id_col: np.repeat(pdf[id_col].to_numpy(), m),
-                vec_col: [v for v in pdf[vec_col] for _ in range(m)],
-                cluster_col: cids_[order].ravel()})
+            dim = V.shape[1]
+            rep = np.repeat(np.arange(len(V)), m)
+            vec_out = pa.ListArray.from_arrays(
+                pa.array(np.arange(len(rep) + 1, dtype=np.int32) * dim),
+                pa.array(V[rep].ravel()))
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0).take(pa.array(rep)).cast(pa.int64()),
+                 vec_out, pa.array(cids_[order].ravel())],
+                names=[id_col, vec_col, cluster_col])
 
-    return corpus.select(id_col, vec_col).mapInPandas(
+    return corpus.select(id_col, vec_col).mapInArrow(
         op, schema=f"{id_col} long, {vec_col} array<double>, "
                    f"{cluster_col} int")
-
-
-def kmeans_assign(corpus: DataFrame, nlist: int = 10, seed: int = 42,
-                  vec_col: str = "embedding",
-                  out_col: str = "cluster_id") -> DataFrame:
-    """MLlib KMeans cluster assignment (the FAISS IVF quantizer analog,
-    day_6/day6_complete.py:105-115; k choice mirrors
-    ``nlist=min(100, n/10)``).  Adds ``out_col`` to the corpus."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = corpus.withColumn("_features",
-                              array_to_vector(F.col(vec_col).cast("array<double>")))
-    model = KMeans(k=nlist, seed=seed, featuresCol="_features",
-                   predictionCol=out_col).fit(feats)
-    return model.transform(feats).drop("_features") \
-        .withColumn(out_col, F.col(out_col).cast("int"))
 
 
 def kmeans_silhouette_sweep(corpus: DataFrame, k_values=range(2, 8),

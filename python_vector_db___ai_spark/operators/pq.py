@@ -9,7 +9,8 @@ code is 8 bytes — 64× compression.  The pieces:
 * :func:`pq_train` — deterministic Lloyd's k-means per subspace on a
   driver-side sample (guarded; seeded numpy, fixed iterations — the
   FAISS train-on-sample pattern, and deterministic so every test and
-  engine reproduces the codebooks bit-for-bit).
+  engine reproduces the codebooks bit-for-bit).  The trainer is
+  ``ivf._lloyd``, the same one that trains the IVF coarse quantizer.
 * :func:`pq_encode` — one Arrow pass: per subspace, argmin distance to
   the (broadcast) codebook → all m byte codes packed into one
   ``bigint`` column (flat fixed-width Arrow transfer).
@@ -33,41 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from python_vector_db___ai_spark.operators._guards import collect_small
-
-
-def _lloyd(X, n_codes: int, iters: int, seed: int):
-    """Seeded, fixed-iteration Lloyd's k-means (numpy, deterministic).
-    Returns (n_codes, dim) centroids.  Empty clusters re-seed from the
-    farthest points — the standard FAISS-style fixup, deterministic
-    because distances and indices are."""
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    n = len(X)
-    init = rng.choice(n, size=min(n_codes, n), replace=False)
-    C = X[np.sort(init)].copy()
-    if len(C) < n_codes:                      # tiny sample: pad with jitter
-        pad = X[rng.integers(0, n, n_codes - len(C))] + 1e-6
-        C = np.vstack([C, pad])
-    for _ in range(iters):
-        d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-        assign = d.argmin(1)
-        empties = []
-        for c in range(n_codes):
-            members = X[assign == c]
-            if len(members):
-                C[c] = members.mean(0)
-            else:
-                empties.append(c)
-        if empties:
-            # each empty cluster re-seeds from a DISTINCT far point
-            # (farthest-first order) — seeding them all from the same
-            # argmax would collapse them into permanently-dead
-            # duplicate codes
-            far_order = np.argsort(-d.min(1), kind="stable")
-            for e, c in enumerate(empties):
-                C[c] = X[far_order[e % len(far_order)]]
-    return C
+from python_vector_db___ai_spark.operators.ivf import _lloyd
 
 
 def _maybe_normalize(V, normalize: bool):

@@ -135,8 +135,9 @@ def ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return recall_against_exact(approx, exact, corpus_id="vec_id")
 
 
-# NB: the MLlib-KMeans IVF recall harness lives in bench.py's ANN
-# section (kmeans_assign + ivf_search + recall_against_exact) rather
+# NB: the trained-quantizer IVF recall harness lives in bench.py's ANN
+# section (kmeans_centroids + assign_clusters + ivf_search +
+# recall_against_exact) rather
 # than the registry: its centroids are engine-internal, so a registry
 # entry could only ever be a rows-only check, and the recall number is
 # what matters — BENCH reports it per round.

@@ -1,8 +1,8 @@
-"""Sources (SURVEY §2.1 S1/S5-S8, §2.2 P1/P2).
+"""Sources (SURVEY §2.1 S1/S5/S6/S8, §2.2 P1/P2).
 
 Every reader returns a plain DataFrame; formats the reference handled
-with bespoke Python (CSV vector tables, document directories, binary
-PDFs) map onto Spark's native sources, which scale horizontally and
+with bespoke Python (CSV vector tables, document directories) map
+onto Spark's native sources, which scale horizontally and
 push projection/predicates into the scan.
 """
 
@@ -48,20 +48,6 @@ def read_documents_dir(spark: SparkSession, path: str,
     return df.select(
         F.input_file_name().alias("path"),
         F.col("value").alias("text"))
-
-
-def read_binary_docs(spark: SparkSession, path: str,
-                     pattern: str = "*.pdf",
-                     recursive: bool = True) -> DataFrame:
-    """S6/S7 binary document scan (PDF/DOCX): ``binaryFile`` source +
-    a downstream extraction pandas UDF (stubbed like multimodal decode;
-    PyPDF2 goes in the UDF when available)."""
-    return (spark.read.format("binaryFile")
-            .option("pathGlobFilter", pattern)
-            .option("recursiveFileLookup", str(recursive).lower())
-            .load(path)
-            .select(F.col("path"), F.col("length").alias("n_bytes"),
-                    F.col("content")))
 
 
 def load_embeddings(spark: SparkSession, path: str,

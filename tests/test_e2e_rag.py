@@ -10,8 +10,9 @@ from pyspark.sql import functions as F
 
 from python_vector_db___ai_spark.operators.embedding import mock_embedding
 from python_vector_db___ai_spark.operators.ivf import (
+    assign_clusters,
     ivf_search,
-    kmeans_assign,
+    kmeans_centroids,
 )
 from python_vector_db___ai_spark.operators.rag import (
     PromptLibrary,
@@ -41,7 +42,8 @@ def test_full_rag_workflow(spark, tmp_path):
     # 2. embed (deterministic mock model) and index with KMeans-IVF
     corpus = table.read().withColumn("embedding",
                                      mock_embedding(F.col("text")))
-    clustered = kmeans_assign(corpus, nlist=2, seed=42)
+    cents = kmeans_centroids(corpus, nlist=2, seed=42)
+    clustered = assign_clusters(corpus, cents, id_col="doc_id")
     assert set(clustered.columns) >= {"doc_id", "embedding", "cluster_id"}
 
     # 3. retrieve: the duplicated document must be each other's nearest
@@ -56,8 +58,8 @@ def test_full_rag_workflow(spark, tmp_path):
 
     # IVF over the KMeans layout agrees on the top hit (probe all
     # clusters -> exact)
-    ivf_hits = ivf_search(queries, clustered, nprobe=2, k=3,
-                          corpus_id="doc_id", cluster_col="cluster_id")
+    ivf_hits = ivf_search(queries, clustered, centroids=cents, nprobe=2,
+                          k=3, corpus_id="doc_id", cluster_col="cluster_id")
     assert ivf_hits.filter(F.col("rank") == 1).first().doc_id in (1, 6)
 
     # 4. context under budget, rank-ordered

@@ -129,3 +129,138 @@ def test_silhouette_matches_independent_numpy(spark):
         s_vals.append((b - a) / max(a, b))
     assert abs(float(np.mean(s_vals)) - mllib_sil) < 1e-6, \
         (float(np.mean(s_vals)), mllib_sil)
+
+
+def _cos_assign_reference(V, cids, C, spill):
+    """NumPy reference of IVF list assignment: cosine rounded to 6
+    (0 for a zero vector), ranked by (score desc, cluster id asc)."""
+    import numpy as np
+
+    order = np.argsort(cids, kind="stable")
+    cids, C = np.asarray(cids)[order], np.asarray(C, dtype=np.float64)[order]
+    V = np.asarray(V, dtype=np.float64)
+    vn, cn = np.linalg.norm(V, axis=1), np.linalg.norm(C, axis=1)
+    out = {}
+    for i, v in enumerate(V):
+        s = [0.0 if vn[i] <= 1e-12 or cn[j] <= 1e-12
+             else round(float(v @ C[j] / (vn[i] * cn[j])), 6)
+             for j in range(len(C))]
+        ranked = sorted(range(len(C)), key=lambda j: (-s[j], cids[j]))
+        out[i] = {int(cids[j]) for j in ranked[:spill]}
+    return out
+
+
+@pytest.mark.parametrize("vec_type", ["array<float>", "array<double>"])
+@pytest.mark.parametrize("spill", [1, 2])
+def test_assign_clusters_matches_numpy_reference(spark, vec_type, spill):
+    import numpy as np
+
+    from python_vector_db___ai_spark.operators.ivf import assign_clusters
+
+    rng = np.random.default_rng(11)
+    V = rng.standard_normal((60, 8))
+    if vec_type == "array<float>":
+        V = V.astype(np.float32)
+    V[0] = 0.0                               # zero vector -> all scores 0
+    V[1] = 0.0
+    V[1][:2] = [1.0, 1.0]                    # exact tie of ids 3 and 5
+    cids = [5, 3, 9, 1]                      # deliberately unsorted
+    C = rng.standard_normal((4, 8))
+    C[0] = 0.0
+    C[0][1] = 2.0                            # id 5 -> e1
+    C[1] = 0.0
+    C[1][0] = 1.0                            # id 3 -> e0
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(V)],
+        f"vec_id long, embedding {vec_type}").repartition(3)
+    cents = spark.createDataFrame(
+        [(c, [float(x) for x in row]) for c, row in zip(cids, C)],
+        "cluster_id int, centroid array<double>")
+    out = assign_clusters(corpus, cents, spill=spill).collect()
+
+    assert len(out) == spill * len(V)
+    got: dict = {}
+    for r in out:
+        got.setdefault(r.vec_id, set()).add(r.cluster_id)
+        assert r.embedding == [float(x) for x in V[r.vec_id]]
+    assert got == _cos_assign_reference(V, cids, C, spill)
+    assert got[0] == ({1} if spill == 1 else {1, 3})   # zero vector
+    assert 3 in got[1]                                # tie -> lower id
+
+
+@pytest.mark.parametrize("bad", [None, [1.0, 2.0, 3.0]],
+                         ids=["null", "ragged"])
+def test_assign_clusters_rejects_null_or_ragged(spark, bad):
+    from python_vector_db___ai_spark.operators.ivf import assign_clusters
+
+    corpus = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, bad), (2, [0.0, 1.0])],
+        "vec_id long, embedding array<double>").coalesce(1)
+    cents = spark.createDataFrame([(0, [1.0, 0.0]), (1, [0.0, 1.0])],
+                                  "cluster_id int, centroid array<double>")
+    with pytest.raises(Exception, match="ValueError.*(null|ragged)"):
+        assign_clusters(corpus, cents).collect()
+
+
+def _vectors_frame(spark, n, dim, seed):
+    import numpy as np
+
+    X = np.random.default_rng(seed).standard_normal((n, dim))
+    return spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(X)],
+        "vec_id long, embedding array<float>").repartition(2)
+
+
+def test_kmeans_centroids_deterministic_and_few_jobs(spark):
+    from python_vector_db___ai_spark.operators.ivf import kmeans_centroids
+
+    corpus = _vectors_frame(spark, 600, 8, 1).cache()
+    corpus.count()
+    sc = spark.sparkContext
+    sc.setJobGroup("test-kmeans-centroids-jobs", "kmeans_centroids")
+    try:
+        cents = kmeans_centroids(corpus, nlist=6, seed=3, max_iter=5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(
+        "test-kmeans-centroids-jobs")
+    first = sorted(cents.collect())
+    second = sorted(kmeans_centroids(corpus, nlist=6, seed=3,
+                                     max_iter=5).collect())
+    corpus.unpersist()
+    assert 1 <= len(jobs) <= 3
+    assert [r.cluster_id for r in first] == list(range(6))
+    assert all(len(r.centroid) == 8 for r in first)
+    assert first == second
+
+
+def test_kmeans_centroids_pads_when_fewer_rows_than_lists(spark):
+    from python_vector_db___ai_spark.operators.ivf import kmeans_centroids
+
+    rows = kmeans_centroids(_vectors_frame(spark, 3, 4, 2), nlist=8,
+                            seed=1).collect()
+    assert sorted(r.cluster_id for r in rows) == list(range(8))
+    assert all(len(r.centroid) == 4 for r in rows)
+
+
+def test_kmeans_centroids_trains_on_normalized_sample(spark, monkeypatch):
+    import numpy as np
+
+    from python_vector_db___ai_spark.operators import ivf
+
+    seen = []
+    real = ivf._lloyd
+
+    def spy(X, n_codes, iters, seed):
+        seen.append(X.copy())
+        return real(X, n_codes, iters, seed)
+
+    monkeypatch.setattr(ivf, "_lloyd", spy)
+    nlist = 2
+    rows = ivf.kmeans_centroids(_vectors_frame(spark, 2000, 4, 5),
+                                nlist=nlist, seed=9).collect()
+    assert len(rows) == nlist
+    (X,) = seen
+    assert 0 < len(X) <= 256 * nlist
+    assert np.allclose(np.linalg.norm(X, axis=1), 1.0)
+
