@@ -80,15 +80,23 @@ def exact_dedup_flags(df: DataFrame, text_col: str = "text",
     """Exact dedup via content hash: every row annotated with its group
     hash, group size, and whether it is the canonical (min-id) member.
 
+    A NULL text has no content to match: its row comes out with a NULL
+    ``content_hash``, ``group_size`` 1 and ``is_canonical`` true (kept,
+    never counted as a duplicate).
+
     Keep ``is_canonical`` rows to dedup; one hash-shuffle total.
     """
     hashed = df.select(F.col(id_col), md5_hex(F.col(text_col)).alias("content_hash"))
     groups = (hashed.groupBy("content_hash")
               .agg(F.count("*").cast("long").alias("group_size"),
                    F.min(id_col).alias("_keep")))
-    return (hashed.join(groups, "content_hash")
-            .select(id_col, "content_hash", "group_size",
-                    (F.col(id_col) == F.col("_keep")).alias("is_canonical")))
+    no_text = F.col("content_hash").isNull()
+    return (hashed.join(groups, "content_hash", "left")
+            .select(id_col, "content_hash",
+                    F.when(no_text, F.lit(1).cast("long"))
+                    .otherwise(F.col("group_size")).alias("group_size"),
+                    (no_text | (F.col(id_col) == F.col("_keep")))
+                    .alias("is_canonical")))
 
 
 def ngram_jaccard_pairs(df: DataFrame, n: int = 3, text_col: str = "text",
@@ -986,10 +994,9 @@ def dedup_components(pairs: DataFrame, ids: DataFrame, rounds: int = 5,
     and a SQL oracle can replay the exact same unrolled iteration.
     After ``r`` rounds every doc within ``r`` hops of its component's
     minimum id has adopted it; near-dup components are dense (verified
-    pairs are near-cliques), so small ``rounds`` converges.  At 100-TB scale each
-    round is one equi-join + one min-aggregation on the id key — the
-    alternating large-star/small-star scheme drops in here if chain
-    diameters ever grow beyond ``rounds``.
+    pairs are near-cliques), so small ``rounds`` converges.  The
+    alternating large-star/small-star scheme (Kiveris et al., SoCC
+    2014) drops in here if chain diameters ever grow beyond ``rounds``.
 
     With ``convergence_check`` (default), one extra propagation round
     runs after the loop and a global ``converged`` column reports
@@ -998,25 +1005,57 @@ def dedup_components(pairs: DataFrame, ids: DataFrame, rounds: int = 5,
     flag and can raise ``rounds``.
 
     Returns ``(id_col, component_id, component_size, is_canonical[,
-    converged])`` for every id in ``ids`` (singletons form their own
-    component).
+    converged])`` for every non-null id in ``ids`` (singletons form
+    their own component).  Precondition: ``ids`` is distinct (every
+    caller passes a key column); component sizes count distinct ids.
 
-    Each round's label frame is materialized (``localCheckpoint``)
-    before the next round reads it.  Without this the round-``r`` plan
-    embeds the round-``r-1`` plan several times over (the join AND the
-    agg AND the convergence probe), so lineage — and recompute — grows
-    exponentially in ``rounds``, and the upstream pair generator
-    (MinHash over the whole corpus) re-executes once per reference: an
-    86-second collapse at a mere 2k docs in the scale bench.  With
-    per-round materialization each round is one equi-join + one
-    min-agg over data that already exists, which is the linear cost
-    the 100-TB story claims; a cluster deployment would use reliable
-    ``checkpoint()`` instead (same semantics, survives executor loss).
+    Labels exist only for ids, so the pairs are first restricted to
+    those whose two endpoints are both in ``ids`` — the rows are those
+    of the unrestricted graph.  That edge list is materialized once (a
+    lazy ``localCheckpoint``, so the upstream pair generator runs once
+    whichever path follows) and at most ``SMALL_SIDE_CAP + 1`` of its
+    rows are read back as Arrow:
+
+    * **Driver path** (edges fit the cap — every ingest batch, the
+      registered query, the 250k-doc sweep notch): the ``rounds``
+      min-label steps and the probe step run in NumPy over the
+      edge-touching nodes (an ``np.minimum.at`` scatter per round over
+      both edge directions, the same min over self and neighbors as a
+      Spark round).  Ids without an edge never change label, so the
+      output is ``ids`` LEFT JOIN a broadcast ``(node, label, size)``
+      literal table, untouched ids coming out as ``(id, id, 1, true)``,
+      and ``converged`` is a literal.  The checkpoint is released
+      before returning: no Spark job per round, no state left behind.
+    * **Spark path** (more edges than the cap — the 100-TB case): each
+      round is one equi-join + one min-aggregation on the id key, and
+      each round's label frame is materialized (``localCheckpoint``)
+      before the next round reads it.  Without this the round-``r``
+      plan embeds the round-``r-1`` plan several times over (the join
+      AND the agg AND the convergence probe), so lineage — and
+      recompute — grows exponentially in ``rounds``.  A cluster
+      deployment would use reliable ``checkpoint()`` instead (same
+      semantics, survives executor loss).
+
+    Both paths give identical rows (differential-tested in
+    ``tests/test_properties_dedup.py``).
     """
-    edges = (pairs.select(F.col("i").alias("_a"), F.col("j").alias("_b"))
-             .unionByName(
-                 pairs.select(F.col("j").alias("_a"), F.col("i").alias("_b")))
+    from python_vector_db___ai_spark.operators._guards import SMALL_SIDE_CAP
+
+    keys = ids.select(F.col(id_col).alias("_k"))
+    und = (pairs.select(F.col("i").alias("_a"), F.col("j").alias("_b"))
+           .join(keys, F.col("_a") == F.col("_k"), "left_semi")
+           .join(keys, F.col("_b") == F.col("_k"), "left_semi")
+           .localCheckpoint(eager=False))
+    small = und.limit(SMALL_SIDE_CAP + 1).toArrow()
+    if small.num_rows <= SMALL_SIDE_CAP:
+        _release_checkpoint(und)
+        return _components_on_driver(small, ids, rounds, id_col,
+                                     convergence_check)
+
+    edges = (und.unionByName(und.select(F.col("_b").alias("_a"),
+                                        F.col("_a").alias("_b")))
              .distinct().localCheckpoint())
+    _release_checkpoint(und)
     labels = ids.select(F.col(id_col).alias("_a"),
                         F.col(id_col).cast("long").alias("_label"))
 
@@ -1051,6 +1090,50 @@ def dedup_components(pairs: DataFrame, ids: DataFrame, rounds: int = 5,
             .agg(F.min((F.col("_next") == F.col("_label")).cast("boolean"))
                  .alias("converged")))
     return out.crossJoin(F.broadcast(conv))
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the RDD behind a ``localCheckpoint``-ed frame now,
+    instead of whenever a JVM GC lets the ContextCleaner find it."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def _components_on_driver(edges, ids: DataFrame, rounds: int, id_col: str,
+                          convergence_check: bool) -> DataFrame:
+    """``dedup_components``' rounds in NumPy over a driver-resident
+    edge list (an Arrow table of ``_a``/``_b`` pairs, either direction,
+    repeats allowed — the min over neighbors ignores both)."""
+    import numpy as np
+    import pyarrow as pa
+
+    m = edges.num_rows
+    nodes, inv = np.unique(np.concatenate([edges.column("_a").to_numpy(),
+                                           edges.column("_b").to_numpy()]),
+                           return_inverse=True)
+    src, dst = inv, np.concatenate([inv[m:], inv[:m]])   # both directions
+
+    def step(lbl):
+        nxt = lbl.copy()
+        np.minimum.at(nxt, src, lbl[dst])
+        return nxt
+
+    labels = nodes.astype(np.int64)
+    for _ in range(rounds):
+        labels = step(labels)
+    _, comp, size = np.unique(labels, return_inverse=True, return_counts=True)
+    table = F.broadcast(ids.sparkSession.createDataFrame(pa.table(
+        {"_node": nodes, "_label": labels, "_size": size[comp]})))
+    cid = F.coalesce(F.col("_label"), F.col(id_col).cast("long"))
+    out = (ids.select(id_col).filter(F.col(id_col).isNotNull())
+           .join(table, F.col(id_col) == F.col("_node"), "left")
+           .select(id_col, cid.alias("component_id"),
+                   F.coalesce(F.col("_size"), F.lit(1).cast("long"))
+                   .alias("component_size"),
+                   (F.col(id_col) == cid).alias("is_canonical")))
+    if not convergence_check:
+        return out
+    return out.withColumn("converged",
+                          F.lit(bool(np.array_equal(step(labels), labels))))
 
 
 def semantic_decontaminate(train: DataFrame, benchmark: DataFrame,

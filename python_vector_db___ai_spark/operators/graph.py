@@ -8,7 +8,9 @@ proves the engine handles fixed-point loops declaratively.
 
 Per iteration: ONE equi-join (ranks onto the out-edge list) and ONE
 hash aggregation on the destination key — the same join+agg round
-shape as label propagation, so cost is O(edges) per round with
+shape as ``dedup_components``' Spark path (the one it takes when the
+edge list exceeds ``SMALL_SIDE_CAP``; smaller graphs run their rounds
+in NumPy on the driver), so cost is O(edges) per round with
 map-side partial aggregation, and no windows.  Each round's rank
 frame is ``localCheckpoint``-materialized: without lineage truncation
 the iterative plan re-embeds every prior round exponentially (a

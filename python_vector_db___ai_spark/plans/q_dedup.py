@@ -79,9 +79,11 @@ WITH h AS (
          min(doc_id) AS keep_id
   FROM h GROUP BY content_hash
 ), flags AS (
-  SELECT h.doc_id, h.content_hash, g.group_size,
-         h.doc_id = g.keep_id AS is_canonical
-  FROM h JOIN g USING (content_hash)
+  SELECT h.doc_id, h.content_hash,
+         CASE WHEN h.content_hash IS NULL THEN 1
+              ELSE g.group_size END::BIGINT AS group_size,
+         h.content_hash IS NULL OR h.doc_id = g.keep_id AS is_canonical
+  FROM h LEFT JOIN g USING (content_hash)
 ), fp AS ({_simhash_sql()})
 SELECT f.doc_id, f.content_hash, f.group_size, f.is_canonical, fp.simhash
 FROM flags f LEFT JOIN fp ON fp.doc_id = f.doc_id
@@ -245,9 +247,10 @@ def _components_oracle() -> str:
     """Unroll the bounded-round min-label propagation: round ``r``
     joins round ``r-1``'s labels over the symmetric edge list and
     takes the min — the exact replay of operators.dedup.
-    dedup_components's Spark loop (fixed rounds, so both engines stop
-    at the same state), plus one extra round whose only job is the
-    global ``converged`` flag (did any label still move?).
+    dedup_components's rounds (fixed rounds, so both engines stop at
+    the same state; its driver path and its Spark loop give the same
+    rows), plus one extra round whose only job is the global
+    ``converged`` flag (did any label still move?).
 
     The edge list is the union of the Jaccard-verified MinHash pairs
     and the exact-dup star edges (each non-canonical doc linked to its
@@ -316,8 +319,10 @@ JOIN doc_sz d ON d.doc_id = l._a
     doc="the end-to-end dedup keep list a pretraining pipeline consumes: "
         "exact-dup star edges (content hash) UNION Jaccard-verified "
         "MinHash near-dup pairs -> connected components via bounded-round "
-        f"min-label propagation ({_CC_ROUNDS} rounds, one equi-join + "
-        "min-agg per round) -> per-doc keep/drop (is_canonical), a global "
+        f"min-label propagation ({_CC_ROUNDS} rounds: in NumPy on the "
+        "driver while the edge list fits SMALL_SIDE_CAP, one equi-join + "
+        "min-agg per round above it) -> per-doc keep/drop (is_canonical), "
+        "a global "
         "convergence flag (one probe round: did any label still move?), "
         "and reclaimed_bytes accounting for every dropped doc; oracle "
         "unrolls the identical iteration",

@@ -22,3 +22,26 @@ def spark():
     s = get_spark("tests", cpus=4, shuffle_partitions=4)
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def components_path():
+    """Context manager selecting one of ``dedup_components``' two paths.
+
+    ``"driver"`` leaves ``SMALL_SIDE_CAP`` alone, so the small test
+    graphs take the driver path; ``"spark"`` sets it to -1, which
+    admits no edge list, not even an empty one, so every call takes
+    the Spark round loop.
+    """
+    from contextlib import contextmanager
+
+    from python_vector_db___ai_spark.operators import _guards
+
+    @contextmanager
+    def select(path: str):
+        with pytest.MonkeyPatch.context() as mp:
+            if path == "spark":
+                mp.setattr(_guards, "SMALL_SIDE_CAP", -1)
+            yield
+
+    return select

@@ -36,6 +36,24 @@ def test_exact_dedup(docs):
     assert rows[1].content_hash == rows[2].content_hash
 
 
+def test_exact_dedup_keeps_null_text_rows(spark):
+    """A NULL text has no content hash to group on: the row is kept as
+    its own canonical singleton instead of vanishing from the output
+    (which a downstream left-anti join would report as a dropped
+    duplicate)."""
+    docs = spark.createDataFrame(
+        [(1, "same"), (2, None), (3, "same"), (4, None), (5, "other")],
+        "doc_id long, text string")
+    rows = {r.doc_id: r for r in exact_dedup_flags(docs).collect()}
+    assert sorted(rows) == [1, 2, 3, 4, 5]
+    for d in (2, 4):
+        assert rows[d].content_hash is None
+        assert rows[d].group_size == 1 and rows[d].is_canonical is True
+    assert rows[1].group_size == 2 and rows[1].is_canonical
+    assert rows[3].group_size == 2 and rows[3].is_canonical is False
+    assert rows[5].group_size == 1 and rows[5].is_canonical
+
+
 def test_ngram_jaccard(docs):
     pairs = {(r.i, r.j): r.jaccard
              for r in ngram_jaccard_pairs(docs, n=3).collect()}
@@ -95,10 +113,11 @@ def test_word_shingles_short_text(spark):
     assert row.sh == []   # shorter than n -> empty, not a down-counting sequence
 
 
-def test_dedup_components_chain_and_canonical(spark):
+def test_dedup_components_chain_and_canonical(spark, components_path):
     """Min-label propagation: a 4-chain + a disjoint pair + a singleton
     resolve to the right components within the round budget, and the
-    bounded-round contract is visible when rounds is too small."""
+    bounded-round contract is visible when rounds is too small — on
+    both the driver path and the Spark round loop."""
     from python_vector_db___ai_spark.operators.dedup import dedup_components
     from pyspark.sql import functions as F
 
@@ -107,29 +126,30 @@ def test_dedup_components_chain_and_canonical(spark):
         [(0, 1), (1, 2), (2, 3),    # chain 0-1-2-3
          (4, 5)],                   # pair
         "i long, j long")
-    got = {r.doc_id: r for r in
-           dedup_components(pairs, ids, rounds=3).collect()}
-    assert {r for r in got} == set(range(7))
-    for d in (0, 1, 2, 3):
-        assert got[d].component_id == 0
-        assert got[d].component_size == 4
-    assert got[0].is_canonical and not got[3].is_canonical
-    for d in (4, 5):
-        assert got[d].component_id == 4
-        assert got[d].component_size == 2
-    assert got[6].component_id == 6 and got[6].component_size == 1
-    assert got[6].is_canonical
+    for path in ("driver", "spark"):
+        with components_path(path):
+            got = {r.doc_id: r for r in
+                   dedup_components(pairs, ids, rounds=3).collect()}
+            # rounds=1: doc 3 is 3 hops from id 0 -> only reaches label 2
+            one = {r.doc_id: r.component_id for r in
+                   dedup_components(pairs, ids, rounds=1).collect()}
+        assert {r for r in got} == set(range(7))
+        for d in (0, 1, 2, 3):
+            assert got[d].component_id == 0
+            assert got[d].component_size == 4
+        assert got[0].is_canonical and not got[3].is_canonical
+        for d in (4, 5):
+            assert got[d].component_id == 4
+            assert got[d].component_size == 2
+        assert got[6].component_id == 6 and got[6].component_size == 1
+        assert got[6].is_canonical
+        assert one[3] == 2 and one[1] == 0 and one[2] == 1
 
-    # rounds=1: doc 3 is 3 hops from id 0 -> only reaches label 2
-    one = {r.doc_id: r.component_id for r in
-           dedup_components(pairs, ids, rounds=1).collect()}
-    assert one[3] == 2 and one[1] == 0 and one[2] == 1
 
-
-def test_dedup_components_round_budget_converged(spark):
+def test_dedup_components_round_budget_converged(spark, components_path):
     """On the registered MinHash pair graph the 5-round budget is a
     fixpoint: one extra round changes nothing (the convergence claim
-    behind the bounded-round contract)."""
+    behind the bounded-round contract), on both paths."""
     from python_vector_db___ai_spark.operators.dedup import dedup_components
     from python_vector_db___ai_spark.operators.dedup import minhash_lsh_pairs
     from python_vector_db___ai_spark.session import load_table
@@ -140,11 +160,40 @@ def test_dedup_components_round_budget_converged(spark):
     pairs = minhash_lsh_pairs(docs, num_hashes=16, bands=4,
                               verify_threshold=0.9).select("i", "j").cache()
     ids = docs.select("doc_id")
-    five = {(r.doc_id, r.component_id) for r in
-            dedup_components(pairs, ids, rounds=5).collect()}
-    six = {(r.doc_id, r.component_id) for r in
-           dedup_components(pairs, ids, rounds=6).collect()}
-    assert five == six
+    for path in ("driver", "spark"):
+        with components_path(path):
+            five = {(r.doc_id, r.component_id) for r in
+                    dedup_components(pairs, ids, rounds=5).collect()}
+            six = {(r.doc_id, r.component_id) for r in
+                   dedup_components(pairs, ids, rounds=6).collect()}
+        assert five == six
+
+
+def test_dedup_components_driver_path_few_jobs_no_state(spark):
+    """A small graph takes the driver path: a handful of Spark jobs in
+    all (not ~9 per round), and no cached or checkpointed RDD outlives
+    the collected output."""
+    from python_vector_db___ai_spark.operators.dedup import dedup_components
+
+    sc = spark.sparkContext
+    ids = spark.createDataFrame([(i,) for i in range(40)], "doc_id long")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 30, 2)] + [(1, 2), (39, 0)],
+        "i long, j long")
+    before = set(sc._jsc.getPersistentRDDs().keys())
+    sc.setJobGroup("test-dedup-components-jobs", "dedup_components")
+    try:
+        rows = dedup_components(pairs, ids, rounds=5).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("test-dedup-components-jobs")
+    assert set(sc._jsc.getPersistentRDDs().keys()) - before == set()
+    assert 1 <= len(jobs) <= 10
+    got = {r.doc_id: (r.component_id, r.component_size) for r in rows}
+    assert len(got) == 40
+    assert got[0] == got[1] == got[2] == got[3] == got[39] == (0, 5)
+    assert got[4] == got[5] == (4, 2) and got[35] == (35, 1)
+    assert all(r.converged is True for r in rows)
 
 
 def test_embedding_neardup_blas_equals_expr(spark):
@@ -211,27 +260,27 @@ def test_semantic_decontaminate(spark):
             assert r.nearest_benchmark_id == int(b_ids[j])
             assert r.max_cosine == pytest.approx(S[i, j], abs=1e-9)
 
-def test_dedup_components_convergence_flag(spark):
+def test_dedup_components_convergence_flag(spark, components_path):
     """A path graph with diameter > rounds must trip the converged
-    flag; enough rounds must clear it.  (Round-budget under-merge is
-    no longer silent.)"""
+    flag; enough rounds must clear it, on both paths.  (Round-budget
+    under-merge is no longer silent.)"""
     from python_vector_db___ai_spark.operators.dedup import dedup_components
 
     ids = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(7)], "i long, j long")   # path 0-..-7
 
-    short = dedup_components(pairs, ids, rounds=2).collect()
-    assert all(r.converged is False for r in short)
-
-    enough = dedup_components(pairs, ids, rounds=7).collect()
-    assert all(r.converged is True for r in enough)
-    assert all(r.component_id == 0 for r in enough)
-
-    # opt-out keeps the legacy 4-column shape
-    cols = dedup_components(pairs, ids, rounds=2,
-                            convergence_check=False).columns
-    assert "converged" not in cols
+    for path in ("driver", "spark"):
+        with components_path(path):
+            short = dedup_components(pairs, ids, rounds=2).collect()
+            enough = dedup_components(pairs, ids, rounds=7).collect()
+            # opt-out keeps the legacy 4-column shape
+            cols = dedup_components(pairs, ids, rounds=2,
+                                    convergence_check=False).columns
+        assert all(r.converged is False for r in short)
+        assert all(r.converged is True for r in enough)
+        assert all(r.component_id == 0 for r in enough)
+        assert "converged" not in cols
 
 
 def test_minhash_max_bucket_drops_hot_buckets(spark):

@@ -10,7 +10,8 @@ Covers the families whose plans were rewritten for scale in rounds
 7-8 and until now were locked only by hand-computed fixtures + the
 sf0.01 oracle: crossdoc_dup_ngrams (single-shuffle solo-mass form),
 span_dedup (one-aggregate keeper), dedup_components (bounded-round
-min-label propagation), decontaminate (postings equi-join).
+min-label propagation; its driver path is also checked row-for-row
+against its Spark round loop), decontaminate (postings equi-join).
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ import hashlib
 import math
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from python_vector_db___ai_spark.functions.pytext import round_half_up
 
@@ -114,19 +115,18 @@ def test_span_dedup_matches_python(sp, corpus, window):
     st.tuples(st.integers(min_value=0, max_value=5),
               st.integers(min_value=0, max_value=5)),
     min_size=0, max_size=10))
-def test_dedup_components_matches_union_find(sp, edges):
+def test_dedup_components_matches_union_find(sp, components_path, edges):
     """With a round budget >= the graph diameter bound (|V| - 1, so
     propagation must converge), the min-label components equal a
     union-find ground truth: component_id is the member minimum, sizes
     match, exactly the minimum is canonical, and the convergence flag
-    reports True."""
+    reports True — on both the driver path and the Spark round loop."""
     from python_vector_db___ai_spark.operators.dedup import dedup_components
 
     n = 6
     edges = {(i, j) for i, j in edges if i != j}
     ids = sp.createDataFrame([(i,) for i in range(n)], "doc_id long")
     pairs = sp.createDataFrame(list(edges), "i long, j long")
-    out = dedup_components(pairs, ids, rounds=n - 1).collect()
 
     parent = list(range(n))
 
@@ -146,13 +146,52 @@ def test_dedup_components_matches_union_find(sp, edges):
     for v in range(n):
         members.setdefault(comp_min[find(v)], []).append(v)
 
-    assert len(out) == n
-    for row in out:
-        want_cid = comp_min[find(row.doc_id)]
-        assert row.component_id == want_cid
-        assert row.component_size == len(members[want_cid])
-        assert row.is_canonical == (row.doc_id == want_cid)
-        assert row.converged is True
+    for path in ("driver", "spark"):
+        with components_path(path):
+            out = dedup_components(pairs, ids, rounds=n - 1).collect()
+        assert len(out) == n
+        for row in out:
+            want_cid = comp_min[find(row.doc_id)]
+            assert row.component_id == want_cid
+            assert row.component_size == len(members[want_cid])
+            assert row.is_canonical == (row.doc_id == want_cid)
+            assert row.converged is True
+
+
+@settings(max_examples=6, deadline=None)
+@given(ids=st.sets(st.integers(min_value=0, max_value=9), max_size=10),
+       pairs=st.lists(st.tuples(st.integers(min_value=0, max_value=11),
+                                st.integers(min_value=0, max_value=11)),
+                      max_size=14),
+       rounds=st.integers(min_value=0, max_value=6))
+# a path longer than the round budget: converged is false
+@example(ids=set(range(8)), pairs=[(i, i + 1) for i in range(7)], rounds=2)
+# duplicate, reversed and self pairs
+@example(ids=set(range(5)), pairs=[(0, 1), (1, 0), (0, 1), (2, 2), (3, 2)],
+         rounds=1)
+# endpoints outside ids, ids without edges, a NULL id
+@example(ids={0, 1, 2, 5, 7, None}, pairs=[(0, 10), (10, 1), (2, 11), (1, 2)],
+         rounds=3)
+# empty pairs
+@example(ids={0, 1, 2}, pairs=[], rounds=0)
+@example(ids={0, 1, 2}, pairs=[], rounds=6)
+def test_dedup_components_driver_equals_spark_loop(sp, components_path, ids,
+                                                  pairs, rounds):
+    """The driver path (NumPy rounds over the edge-touching nodes, a
+    broadcast left join back onto ``ids``) returns exactly the rows of
+    the Spark round loop, the ``converged`` flag included."""
+    from python_vector_db___ai_spark.operators.dedup import dedup_components
+
+    pairs_df = sp.createDataFrame(pairs, "i long, j long")
+    ids_df = sp.createDataFrame([(i,) for i in ids], "doc_id long")
+    rows = {}
+    for path in ("driver", "spark"):
+        with components_path(path):
+            rows[path] = sorted(tuple(r) for r in dedup_components(
+                pairs_df, ids_df, rounds=rounds).collect())
+    assert rows["driver"] == rows["spark"]
+    assert [r[0] for r in rows["driver"]] == sorted(i for i in ids
+                                                    if i is not None)
 
 
 @settings(max_examples=8, deadline=None)

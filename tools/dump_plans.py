@@ -40,9 +40,11 @@ SHOWCASE = [
      "broadcast back - NO window over the skewed lang key"),
     ("dedup_components",
      "dedup keep list: exact-dup star edges + MinHash pairs, "
-     "bounded-round min-label propagation (one equi-join + "
-     "min-aggregation per round, all on the id key), convergence probe "
-     "as a 1-row broadcast"),
+     "bounded-round min-label propagation run on the driver (the edge "
+     "list fits SMALL_SIDE_CAP), so the plan is the id scan LEFT JOIN a "
+     "broadcast (node, label, size) literal table with the convergence "
+     "flag as a literal; above the cap each round is one equi-join + "
+     "min-aggregation on the id key"),
     ("bm25_rrf_hybrid",
      "hybrid retrieval: ONE cached inverted index (dl-carrying postings "
      "+ lengths + term-df dictionary) feeds the single-query and batch "
