@@ -17,6 +17,10 @@ Deterministic (md5-free, plain arithmetic) and fully oracle-checkable.
 
 from __future__ import annotations
 
+import json
+from collections import Counter
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -174,6 +178,27 @@ BM25_TERM_SALT = 8
 # term-isin filter keeps).
 BM25_INDEX_CODEC = "zstd"
 
+# The standing index's manifest: written last by save_bm25_index, and
+# load_bm25_index reads nothing without it.  Bump the version when the
+# layout or the manifest's fields change.
+BM25_MANIFEST = "_MANIFEST.json"
+BM25_INDEX_VERSION = 1
+_PARTS = ("postings", "lengths", "term_df")
+
+
+class BM25Index(NamedTuple):
+    """A loaded :func:`save_bm25_index` artifact: the three parts plus
+    the corpus stats its manifest records, so a batch scorer needs no
+    stats job.  ``n_docs`` counts every doc; ``n_dl`` those with a
+    defined length (NULL text has none), the divisor of ``avg(dl)``;
+    ``sum_dl`` is exact, since every ``dl`` is integral."""
+    postings: DataFrame
+    lengths: DataFrame
+    term_df: DataFrame
+    n_docs: int
+    n_dl: int
+    sum_dl: float | None
+
 
 def _save_postings_frame(docs: DataFrame, text_col: str, id_col: str,
                          num_partitions: int) -> DataFrame:
@@ -193,7 +218,7 @@ def save_bm25_index(docs: DataFrame, path: str,
                     text_col: str = "text", id_col: str = "doc_id",
                     stage_timings: dict | None = None,
                     num_partitions: int | None = None,
-                    ) -> tuple[DataFrame, DataFrame, DataFrame]:
+                    ) -> BM25Index:
     """Persist the maintained inverted index to disk — the production
     artifact a 100-TB corpus maintains across sessions instead of
     rebuilding (and instead of ``.cache()``-ing corpus-sized postings
@@ -214,6 +239,17 @@ def save_bm25_index(docs: DataFrame, path: str,
     * ``term_df/`` — the vocab-sized ``(term, df)`` dictionary,
       computed from the RELOADED postings so the artifact is
       self-consistent by construction.
+    * ``_MANIFEST.json`` — written LAST: the format version
+      (``BM25_INDEX_VERSION``), the corpus stats ``n_docs`` (docs in
+      ``lengths``), ``n_dl`` (those with a defined length — NULL text
+      has none, and ``avg(dl)`` skips it) and ``sum_dl``, and the DDL
+      schema of each part.  The stats are recorded by
+      ``DataFrame.observe`` on the ``lengths`` write, which already
+      has one row per doc, so they cost no job.  Any old manifest is
+      deleted before the parts are rewritten, so an interrupted
+      rewrite leaves a directory :func:`load_bm25_index` refuses
+      instead of a mix of old and new parts.  Written through the
+      session's Hadoop FileSystem, so non-local URIs work.
 
     Plan shape (r13): ONE exchange, of ALREADY-AGGREGATED postings.
     Per-doc term frequencies come from the map-side run-length encode
@@ -243,6 +279,8 @@ def save_bm25_index(docs: DataFrame, path: str,
     import math as _math
     import time as _time
 
+    from pyspark.sql import Observation
+
     spark = docs.sparkSession
     par = spark.sparkContext.defaultParallelism
     t0 = _time.perf_counter()
@@ -252,18 +290,35 @@ def save_bm25_index(docs: DataFrame, path: str,
                                              / BM25_DOCS_PER_PARTITION))
     else:
         n_docs = None
-    (_save_postings_frame(docs, text_col, id_col, num_partitions)
-     .write.option("compression", BM25_INDEX_CODEC)
-     .parquet(f"{path}/postings", mode="overwrite"))
+    manifest = _manifest(spark, path)
+    _, fs, jpath = manifest
+    fs.delete(jpath, False)
+    postings = _save_postings_frame(docs, text_col, id_col, num_partitions)
+    postings.write.option("compression", BM25_INDEX_CODEC) \
+        .parquet(f"{path}/postings", mode="overwrite")
     t1 = _time.perf_counter()
-    doc_lengths(docs, text_col, id_col) \
+    stats = Observation("bm25_corpus_stats")
+    lengths = doc_lengths(docs, text_col, id_col)
+    lengths.observe(stats, F.count(F.lit(1)).alias("n_docs"),
+                    F.count("dl").alias("n_dl"),
+                    F.sum("dl").alias("sum_dl")) \
         .write.option("compression", BM25_INDEX_CODEC) \
         .parquet(f"{path}/lengths", mode="overwrite")
     t2 = _time.perf_counter()
-    term_df(spark.read.parquet(f"{path}/postings")) \
-        .write.option("compression", BM25_INDEX_CODEC) \
+    postings_ddl = _ddl(postings)
+    dictionary = term_df(spark.read.schema(postings_ddl)
+                         .parquet(f"{path}/postings"))
+    dictionary.write.option("compression", BM25_INDEX_CODEC) \
         .parquet(f"{path}/term_df", mode="overwrite")
     t3 = _time.perf_counter()
+    observed = stats.get
+    _write_text(manifest, json.dumps({
+        "version": BM25_INDEX_VERSION,
+        "n_docs": observed["n_docs"],
+        "n_dl": observed["n_dl"],
+        "sum_dl": observed["sum_dl"],
+        "schemas": dict(zip(_PARTS, (postings_ddl, _ddl(lengths),
+                                     _ddl(dictionary))))}))
     if stage_timings is not None:
         import os as _os
 
@@ -292,32 +347,88 @@ def save_bm25_index(docs: DataFrame, path: str,
     return load_bm25_index(spark, path)
 
 
-def load_bm25_index(spark, path: str
-                    ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Reload a :func:`save_bm25_index` artifact as the 3-tuple
-    ``(postings, lengths, term_df)`` accepted by every scoring
-    function's ``prebuilt`` parameter.
+def load_bm25_index(spark, path: str) -> BM25Index:
+    """Reload a :func:`save_bm25_index` artifact as a
+    :class:`BM25Index`, accepted by every scoring function's
+    ``prebuilt`` parameter.  Fires no Spark job: the manifest is read
+    on the driver, and each part is read with its recorded schema, so
+    there is no parquet schema inference.
 
-    The postings frame carries a provenance tag
-    (``_bm25_disk_index = True``, a plain Python attribute on the
-    DataFrame handle): the batch scorer pushes its query-term isin
-    literal into the scan ONLY for disk-backed postings, where the
-    sorted-by-term row-group statistics make it prune (on in-flight or
-    cached postings the literal is measured overhead).  The tag rides
-    the handle, so pass these frames — not re-derived ones — as
-    ``prebuilt``."""
-    postings = spark.read.parquet(f"{path}/postings")
-    postings._bm25_disk_index = True
-    return (postings,
-            spark.read.parquet(f"{path}/lengths"),
-            spark.read.parquet(f"{path}/term_df"))
+    Refuses (``ValueError``) a directory whose manifest is missing,
+    unreadable or of another format version — the state an
+    interrupted :func:`save_bm25_index` leaves, since the manifest is
+    deleted first and written last.
+
+    The batch scorer pushes its query-term isin literal into the
+    postings scan only for a :class:`BM25Index` (see
+    :func:`bm25_scores_batch`'s ``disk_backed``): the sorted-by-term
+    row-group statistics make it prune there, while on in-flight or
+    cached postings the literal is measured overhead."""
+    from py4j.protocol import Py4JJavaError
+
+    manifest = _manifest(spark, path)
+    try:
+        meta = json.loads(_read_text(manifest))
+        version = meta["version"]
+        schemas = [meta["schemas"][part] for part in _PARTS]
+        stats = int(meta["n_docs"]), int(meta["n_dl"]), meta["sum_dl"]
+    except (Py4JJavaError, ValueError, KeyError, TypeError) as exc:
+        raise ValueError(f"{path} is not a complete BM25 index: its "
+                         f"{BM25_MANIFEST} is missing or unreadable "
+                         f"({exc!r}); rebuild it with save_bm25_index"
+                         ) from exc
+    if version != BM25_INDEX_VERSION:
+        raise ValueError(f"{path}: BM25 index format version {version!r}, "
+                         f"this reader needs {BM25_INDEX_VERSION}; "
+                         f"rebuild it with save_bm25_index")
+    parts = (spark.read.schema(ddl).parquet(f"{path}/{part}")
+             for part, ddl in zip(_PARTS, schemas))
+    return BM25Index(*parts, *stats)
+
+
+def _ddl(df: DataFrame) -> str:
+    return df._jdf.schema().toDDL()
+
+
+def _manifest(spark, path: str):
+    """``(jvm, FileSystem, Path)`` of the index manifest under the
+    session's Hadoop configuration — the filesystem the parquet parts
+    are written to."""
+    jvm = spark._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{BM25_MANIFEST}")
+    return jvm, jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def _write_text(manifest, text: str) -> None:
+    _, fs, jpath = manifest
+    out = fs.create(jpath, True)
+    try:
+        out.write(bytearray(text.encode("utf-8")))
+    finally:
+        out.close()
+
+
+def _read_text(manifest) -> str:
+    jvm, fs, jpath = manifest
+    stream = fs.open(jpath)
+    try:
+        return bytes(jvm.org.apache.hadoop.io.IOUtils
+                     .readFullyToByteArray(stream)).decode("utf-8")
+    finally:
+        stream.close()
 
 
 def _unpack_prebuilt(prebuilt):
-    """(postings, lengths) or (postings, lengths, term_df) -> 3-tuple."""
-    if len(prebuilt) == 2:
-        return prebuilt[0], prebuilt[1], None
-    return prebuilt
+    """``prebuilt`` -> ``(postings, lengths, term_df, stats)``.
+
+    Accepts ``(postings, lengths)``, ``(postings, lengths, term_df)``
+    or a :class:`BM25Index`; ``stats`` is the index's recorded
+    ``(n_docs, n_dl, sum_dl)``, else ``None``."""
+    if isinstance(prebuilt, BM25Index):
+        return (prebuilt.postings, prebuilt.lengths, prebuilt.term_df,
+                (prebuilt.n_docs, prebuilt.n_dl, prebuilt.sum_dl))
+    postings, lengths, *tdf = prebuilt
+    return postings, lengths, (tdf[0] if tdf else None), None
 
 
 def bm25_scores(docs: DataFrame, query_terms: list[str],
@@ -340,18 +451,18 @@ def bm25_scores(docs: DataFrame, query_terms: list[str],
     maintained inverted-index table at scale) so multiple searches
     tokenize the corpus once; an optional third element (the
     :func:`term_df` dictionary) additionally skips the per-search df
-    aggregation — bit-identical scores either way.
+    aggregation — bit-identical scores either way.  A
+    :class:`BM25Index` is accepted too; this single-query form still
+    derives its stats in the plan.
     """
     if prebuilt is not None:
-        postings, lengths, tdf = _unpack_prebuilt(prebuilt)
+        postings, lengths, tdf, _ = _unpack_prebuilt(prebuilt)
     else:
         postings = term_postings(docs, text_col, id_col)
         lengths = doc_lengths(docs, text_col, id_col)
         tdf = None
     stats = lengths.agg(F.count("*").cast("double").alias("n_docs"),
                         F.avg("dl").alias("avgdl"))
-
-    from collections import Counter
 
     # bag semantics: a term repeated in the query contributes once per
     # occurrence (the classic sum over query terms), via a multiplicity
@@ -420,94 +531,101 @@ def bm25_scores_batch(docs: DataFrame, queries: DataFrame,
     reference's per-query evaluation surface (day_13/src/main.py:126-237)
     and this engine's batch-everything convention.
 
-    ``queries`` is ``(query_id, terms array<string>)``.  Plan shape:
-    explode the query terms to ``(query_id, term, qtf)`` (bag semantics
-    — a repeated term weights by its multiplicity, same as the
-    single-query path), equi-join the corpus postings on ``term`` with
-    the query table **broadcast**, aggregate per ``(query_id, doc)``.
-    The corpus side only ever shuffles on its own keys (doc for the
-    length join, (query, doc) for the final agg); the postings table is
-    the classic inverted-index layout, term-partitioned at 100 TB.
+    ``queries`` is ``(query_id, terms array<string>)``, driver-small by
+    contract (like the query side of ``knn_join_blas`` and
+    ``ivf_search``).  Construction reads its exploded ``(query_id,
+    term)`` rows once (:func:`~._guards.collect_small`, one job) and
+    builds the ``(query_id, term, qtf)`` table on the driver: terms
+    lower-cased, NULL terms skipped, bag semantics (a repeated term
+    weights by its multiplicity, as in :func:`bm25_scores`), the
+    input's ``query_id`` type kept.  That table enters the plan as an
+    Arrow-built ``LocalRelation``, so the plan neither explodes,
+    aggregates nor shuffles the query table.  Each of its rows gets
+    its term's ``df`` (from the ``term_df`` dictionary, else a count
+    over the postings of the batch's terms), the result — still
+    query-sized — is **broadcast**, and the corpus postings equi-join
+    it on ``term``: the inner join alone restricts them to the
+    batch's terms.  The scores sum per ``(query_id, doc)``.  The
+    corpus side only ever shuffles on its own keys (doc for the
+    length join, (query, doc) for the final agg); the postings table
+    is the classic inverted-index layout, term-partitioned at 100 TB.
     Returns ``(query_id, id_col, bm25)`` for (query, doc) pairs
-    matching >= 1 term.  ``prebuilt`` shares a ``(postings, lengths)``
-    pair across searches (see :func:`bm25_scores`).
+    matching >= 1 term.  ``prebuilt`` shares a ``(postings,
+    lengths[, term_df])`` tuple across searches (see
+    :func:`bm25_scores`) or passes a :class:`BM25Index`.
 
-    ``disk_backed`` makes the pushdown contract explicit in the
-    signature (r12 ADVICE — the provenance attribute silently drops
-    off any transformed/re-read handle): ``True`` forces the
-    term-isin scan restriction, ``False`` disables it, ``None``
-    (default) infers from the :func:`load_bm25_index` provenance tag
-    on the postings handle.
+    The corpus stats enter the score as literals: ``N`` is the
+    ``lengths`` row count and ``avgdl = sum(dl) / count(dl)``, equal
+    bit for bit to ``avg(dl)`` because every ``dl`` is integral.  A
+    :class:`BM25Index` carries them from its manifest (no job); for a
+    tuple or ``prebuilt=None`` construction reads them with one
+    ``lengths`` aggregate.  Only the source of the numbers differs.
+
+    ``disk_backed`` says whether to push the batch's term list into
+    the postings scan as an ``isin`` literal: ``True`` forces it,
+    ``False`` disables it, ``None`` (default) pushes it for a
+    :class:`BM25Index` only.  On the saved index the pushed
+    ``In(term, ...)`` predicate prunes row groups by the term min/max
+    statistics of the sorted-by-term layout — the difference between
+    scanning a sliver of a 100-TB standing index and scanning all of
+    it per batch (the dictionary scan gets the same literal).  For
+    in-flight or cached postings the literal is pure overhead (INSET
+    re-evaluation on every branch constraint propagation copies it
+    to, measured +0.6-0.8 s on the sf0.1 hybrid query with nothing
+    prunable behind it).  A batch of more than 8,192 distinct terms
+    skips the literal; the join restricts the postings either way.
+    The list keeps the terms' first-appearance order.
     """
+    import pyarrow as pa
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    from python_vector_db___ai_spark.operators._guards import collect_small
+
     if prebuilt is not None:
-        postings, lengths, tdf = _unpack_prebuilt(prebuilt)
+        postings, lengths, tdf, stats = _unpack_prebuilt(prebuilt)
     else:
         postings = term_postings(docs, text_col, id_col)
         lengths = doc_lengths(docs, text_col, id_col)
-        tdf = None
-    stats = lengths.agg(F.count("*").cast("double").alias("n_docs"),
-                        F.avg("dl").alias("avgdl"))
-    qterms = (queries
-              .select(F.col(query_id),
-                      F.explode(F.col(terms_col)).alias("term"))
-              .withColumn("term", F.lower(F.col("term")))
-              .groupBy(query_id, "term")
-              .agg(F.count("*").cast("double").alias("qtf")))
-    bterms = qterms.select("term").distinct()
-    # DISK-backed postings only: push the term restriction INTO the
-    # postings scan as an isin literal, not just a broadcast join — a
-    # join filters after the scan reads every row group, while the
-    # pushed `In(term, ...)` predicate prunes row groups by the term
-    # min/max statistics the save_bm25_index sorted-by-term layout
-    # maintains: the difference between scanning a sliver of a 100-TB
-    # standing index and scanning all of it per batch.  The term list
-    # is query-sized by contract (collect_small); a pathological
-    # >8k-term batch skips the literal and keeps the join-only plan.
-    # The broadcast join stays either way.  For IN-FLIGHT or cached
-    # postings the literal is pure overhead (a collect job at plan
-    # construction plus INSET re-evaluation on every branch constraint
-    # propagation copies it to, measured +0.6-0.8 s on the sf0.1
-    # hybrid query with nothing prunable behind it), so it is gated on
-    # the :func:`load_bm25_index` provenance tag.
-    if (disk_backed if disk_backed is not None
-            else getattr(postings, "_bm25_disk_index", False)):
-        from python_vector_db___ai_spark.operators._guards import (
-            collect_small,
-        )
+        tdf = stats = None
+    if stats is None:
+        stats = lengths.agg(F.count(F.lit(1)), F.count("dl"),
+                            F.sum("dl")).first()
+    n_docs, n_dl, sum_dl = stats
+    avgdl = sum_dl / n_dl if n_dl else None
 
-        try:
-            qterm_rows = collect_small(
-                bterms, "bm25 batch query terms", cap=8192,
-                hint="an isin literal this large would bloat the "
-                     "plan; falling back to the join-only "
-                     "restriction is automatic")
-            postings = postings.filter(
-                F.col("term").isin([r["term"] for r in qterm_rows]))
-        except ValueError:
-            pass
-    matched = postings.join(F.broadcast(bterms), "term")
-    if tdf is not None:  # dictionary df: no second pass over postings
-        df_counts = tdf.join(F.broadcast(bterms), "term")
-    else:
+    exploded = (queries
+                .select(F.col(query_id),
+                        F.explode(F.col(terms_col)).alias("term"))
+                .select(query_id, F.lower(F.col("term")).alias("term"))
+                .filter(F.col("term").isNotNull()))
+    qtf = Counter(tuple(r) for r in
+                  collect_small(exploded, "bm25 batch query terms"))
+    qtable = F.broadcast(queries.sparkSession.createDataFrame(
+        pa.table({query_id: [q for q, _ in qtf], "term": [t for _, t in qtf],
+                  "qtf": [float(n) for n in qtf.values()]}),
+        StructType(exploded.schema.fields
+                   + [StructField("qtf", DoubleType(), False)])))
+    terms = list(dict.fromkeys(t for _, t in qtf))
+    if (disk_backed if disk_backed is not None
+            else isinstance(prebuilt, BM25Index)) and len(terms) <= 8192:
+        postings = postings.filter(F.col("term").isin(terms))
+        if tdf is not None:
+            tdf = tdf.filter(F.col("term").isin(terms))
+    if tdf is None:
         # postings carry one row per (doc, term), so df is a plain count
-        df_counts = (matched.groupBy("term")
-                     .agg(F.count("*").cast("double").alias("df")))
-    idf = F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5)
-                / (F.col("df") + 0.5))
-    scored = (matched
-              .join(F.broadcast(qterms), "term")
-              .join(F.broadcast(df_counts), "term"))
+        tdf = term_df(postings.join(qtable, "term", "left_semi"))
+    # the query table with each term's df attached: still query-sized
+    weights = qtable.join(tdf, "term")
+    scored = postings.join(F.broadcast(weights), "term")
     if "dl" not in postings.columns:  # plain postings: fetch dl by join
         scored = scored.join(lengths, id_col)
-    scored = (scored
-              .crossJoin(F.broadcast(stats))
-              .withColumn(
-                  "term_score",
-                  F.col("qtf") * idf * (F.col("tf") * (k1 + 1))
+    idf = F.log(1.0 + (F.lit(float(n_docs)) - F.col("df") + 0.5)
+                / (F.col("df") + 0.5))
+    term_score = (F.col("qtf") * idf * (F.col("tf") * (k1 + 1))
                   / (F.col("tf")
-                     + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))))
+                     + k1 * (1 - b + b * F.col("dl") / F.lit(avgdl))))
     return (scored.groupBy(query_id, id_col)
-            .agg(F.sum("term_score").alias("bm25")))
+            .agg(F.sum(term_score).alias("bm25")))
 
 
 def bm25_topk_batch(docs: DataFrame, queries: DataFrame, k: int = 10,

@@ -653,6 +653,7 @@ def minhash_lsh_pairs(df: DataFrame, num_hashes: int = 16, bands: int = 4,
     sigs = minhash_signature(df, num_hashes, shingle_n, text_col, id_col,
                              hashed_shingles=not exact_strings) \
         .cache()
+    cached = [sigs]
     sh_col = "shingles" if exact_strings else "sh64"
     if stage_timings is not None:
         t0 = _time.perf_counter()
@@ -674,6 +675,7 @@ def minhash_lsh_pairs(df: DataFrame, num_hashes: int = 16, bands: int = 4,
         # cache only in profile mode: the count barrier would otherwise
         # recompute the banding self-join for the verify pass.
         cand = cand.cache()
+        cached.append(cand)
         t0 = _time.perf_counter()
         stage_timings["n_candidates"] = cand.count()
         stage_timings["band_sec"] = round(_time.perf_counter() - t0, 3)
@@ -686,7 +688,7 @@ def minhash_lsh_pairs(df: DataFrame, num_hashes: int = 16, bands: int = 4,
         # "_cached_frames" is a RESERVED key holding live DataFrame
         # handles — strip it with :func:`pop_cached_frames` before
         # JSON-serializing the dict (r11 ADVICE).
-        stage_timings["_cached_frames"] = [sigs, cand]
+        stage_timings["_cached_frames"] = cached
     src = sigs
     if prune_candidate_ids:
         ids = (cand.select(F.col("i").alias("_id"))
@@ -706,6 +708,11 @@ def minhash_lsh_pairs(df: DataFrame, num_hashes: int = 16, bands: int = 4,
            .select("i", "j", est.alias("est_jaccard"), true_j.alias("jaccard")))
     if verify_threshold is not None:
         out = out.filter(F.col("jaccard") >= verify_threshold)
+    # The caches ride on the result (same handle convention as
+    # :func:`minhash_incremental_flags`): :func:`dedup_components`
+    # unpersists them once it has read its edge list, and any other
+    # consumer can do the same after materializing ``out``.
+    out._cached_frames = cached
     return out
 
 
@@ -1034,7 +1041,14 @@ def dedup_components(pairs: DataFrame, ids: DataFrame, rounds: int = 5,
       AND the agg AND the convergence probe), so lineage — and
       recompute — grows exponentially in ``rounds``.  A cluster
       deployment would use reliable ``checkpoint()`` instead (same
-      semantics, survives executor loss).
+      semantics, survives executor loss).  Round ``r-1``'s checkpoint
+      is released as soon as round ``r``'s is materialized, so what
+      stays persisted is what the returned frame reads: the last
+      round's labels and, for the convergence probe, the edge list.
+
+    Either path unpersists the caches ``pairs`` hands over as
+    ``_cached_frames`` (:func:`minhash_lsh_pairs`' signature cache)
+    once the edge list has been read: nothing downstream reads them.
 
     Both paths give identical rows (differential-tested in
     ``tests/test_properties_dedup.py``).
@@ -1049,6 +1063,7 @@ def dedup_components(pairs: DataFrame, ids: DataFrame, rounds: int = 5,
     small = und.limit(SMALL_SIDE_CAP + 1).toArrow()
     if small.num_rows <= SMALL_SIDE_CAP:
         _release_checkpoint(und)
+        _release_cached(pairs)
         return _components_on_driver(small, ids, rounds, id_col,
                                      convergence_check)
 
@@ -1056,6 +1071,7 @@ def dedup_components(pairs: DataFrame, ids: DataFrame, rounds: int = 5,
                                         F.col("_a").alias("_b")))
              .distinct().localCheckpoint())
     _release_checkpoint(und)
+    _release_cached(pairs)
     labels = ids.select(F.col(id_col).alias("_a"),
                         F.col(id_col).cast("long").alias("_label"))
 
@@ -1070,8 +1086,11 @@ def dedup_components(pairs: DataFrame, ids: DataFrame, rounds: int = 5,
                                 F.coalesce(F.col("_mn"), F.col("_label")))
                         .alias("_label")))
 
-    for _ in range(rounds):
-        labels = _propagate(labels).localCheckpoint()
+    for r in range(rounds):
+        nxt = _propagate(labels).localCheckpoint()
+        if r:
+            _release_checkpoint(labels)
+        labels = nxt
     sizes = labels.groupBy("_label").agg(
         F.count("*").cast("long").alias("component_size"))
     out = (labels.join(sizes, "_label")
@@ -1080,6 +1099,7 @@ def dedup_components(pairs: DataFrame, ids: DataFrame, rounds: int = 5,
                    "component_size",
                    (F.col("_a") == F.col("_label")).alias("is_canonical")))
     if not convergence_check:
+        _release_checkpoint(edges)
         return out
     # One extra round: if any label would still move, the graph has
     # diameter > rounds and the grouping is incomplete.  The flag is a
@@ -1096,6 +1116,13 @@ def _release_checkpoint(df: DataFrame) -> None:
     """Unpersist the RDD behind a ``localCheckpoint``-ed frame now,
     instead of whenever a JVM GC lets the ContextCleaner find it."""
     df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def _release_cached(pairs: DataFrame) -> None:
+    """Unpersist the caches a pair generator hands over on its result
+    (``_cached_frames``, e.g. :func:`minhash_lsh_pairs`' signatures)."""
+    for frame in getattr(pairs, "_cached_frames", ()):
+        frame.unpersist()
 
 
 def _components_on_driver(edges, ids: DataFrame, rounds: int, id_col: str,

@@ -14,7 +14,10 @@ in NumPy on the driver), so cost is O(edges) per round with
 map-side partial aggregation, and no windows.  Each round's rank
 frame is ``localCheckpoint``-materialized: without lineage truncation
 the iterative plan re-embeds every prior round exponentially (a
-cluster deployment uses reliable ``checkpoint()``).
+cluster deployment uses reliable ``checkpoint()``).  A round's
+checkpoint is released once the next round's is materialized, and the
+edge list after the last round, so only the returned ranks stay
+persisted.
 
 Variant pinned for cross-engine determinism (replayed by the unrolled
 MATERIALIZED-CTE oracle in ``plans/q_dedup.py``): undirected edges
@@ -30,6 +33,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from python_vector_db___ai_spark.operators.dedup import (
+    _release_checkpoint,
+    word_shingles,
+)
 
 
 def pagerank(edges: DataFrame, nodes: DataFrame, iters: int = 5,
@@ -58,17 +66,20 @@ def pagerank(edges: DataFrame, nodes: DataFrame, iters: int = 5,
     spine = nodes.select(F.col(node_col).alias("node"))
     ranks = spine.withColumn("rank", F.lit(1.0 / n))
     teleport = (1.0 - damping) / n
-    for _ in range(iters):
+    for t in range(iters):
         contrib = (walk.join(ranks, walk["src"] == ranks["node"])
                    .groupBy("dst")
                    .agg(F.sum(F.col("rank") / F.col("deg")).alias("m")))
-        ranks = (spine.join(contrib, spine["node"] == contrib["dst"],
-                            "left")
-                 .select("node",
-                         (F.lit(teleport)
-                          + damping * F.coalesce("m", F.lit(0.0)))
-                         .alias("rank"))
-                 .localCheckpoint())
+        nxt = (spine.join(contrib, spine["node"] == contrib["dst"], "left")
+               .select("node",
+                       (F.lit(teleport)
+                        + damping * F.coalesce("m", F.lit(0.0)))
+                       .alias("rank"))
+               .localCheckpoint())
+        if t:
+            _release_checkpoint(ranks)
+        ranks = nxt
+    _release_checkpoint(walk)
     return ranks.select(F.col("node").alias(node_col), "rank")
 
 
@@ -84,8 +95,6 @@ def shared_shingle_edges(docs: DataFrame, n: int = 5,
     self-join, so a boilerplate gram shared by half the corpus can
     never drive the pair fan-out quadratic.
     """
-    from python_vector_db___ai_spark.operators.dedup import word_shingles
-
     grams = docs.select(
         F.col(id_col),
         F.explode(word_shingles(F.col(text_col), n)).alias("gram"))

@@ -256,10 +256,15 @@ def _components_oracle() -> str:
     and the exact-dup star edges (each non-canonical doc linked to its
     content-hash group's min id), so the components — and the keep
     list derived from them — cover byte-identical and near-dup copies
-    in one pass."""
+    in one pass.
+
+    Every CTE is ``MATERIALIZED`` (as in the pagerank oracle): each
+    round reads the previous round twice, and DuckDB 1.0 inlines an
+    unmarked CTE at each reference, so the work would double per round
+    and run out of memory at every scale factor."""
     steps = []
     for r in range(1, _CC_ROUNDS + 2):      # +1 convergence-probe round
-        steps.append(f"""l{r} AS (
+        steps.append(f"""l{r} AS MATERIALIZED (
   SELECT l._a, least(l._label, coalesce(min(nb._label), l._label)) AS _label
   FROM l{r - 1} l
   LEFT JOIN edges e ON e._a = l._a
@@ -270,35 +275,35 @@ def _components_oracle() -> str:
     last = f"l{_CC_ROUNDS}"
     probe = f"l{_CC_ROUNDS + 1}"
     return f"""
-WITH mh_pairs AS ({_minhash_oracle()}),
-ids AS (SELECT doc_id FROM documents WHERE doc_id < {_MH_DOCS}),
-h AS (
+WITH mh_pairs AS MATERIALIZED ({_minhash_oracle()}),
+ids AS MATERIALIZED (SELECT doc_id FROM documents WHERE doc_id < {_MH_DOCS}),
+h AS MATERIALIZED (
   SELECT doc_id, md5(text) AS ch FROM documents WHERE doc_id < {_MH_DOCS}
 ),
-g AS (SELECT ch, min(doc_id) AS keep_id FROM h GROUP BY ch),
-ex_edges AS (
+g AS MATERIALIZED (SELECT ch, min(doc_id) AS keep_id FROM h GROUP BY ch),
+ex_edges AS MATERIALIZED (
   SELECT g.keep_id AS i, h.doc_id AS j
   FROM h JOIN g USING (ch) WHERE h.doc_id <> g.keep_id
 ),
-all_pairs AS (
+all_pairs AS MATERIALIZED (
   SELECT i, j FROM mh_pairs UNION SELECT i, j FROM ex_edges
 ),
-edges AS (
+edges AS MATERIALIZED (
   SELECT i AS _a, j AS _b FROM all_pairs
   UNION
   SELECT j AS _a, i AS _b FROM all_pairs
 ),
-l0 AS (SELECT doc_id AS _a, doc_id AS _label FROM ids),
+l0 AS MATERIALIZED (SELECT doc_id AS _a, doc_id AS _label FROM ids),
 {chain},
-sizes AS (
+sizes AS MATERIALIZED (
   SELECT _label, count(*)::BIGINT AS component_size
   FROM {last} GROUP BY _label
 ),
-conv AS (
+conv AS MATERIALIZED (
   SELECT coalesce(bool_and(a._label = b._label), true) AS converged
   FROM {last} a JOIN {probe} b ON a._a = b._a
 ),
-doc_sz AS (
+doc_sz AS MATERIALIZED (
   SELECT doc_id, strlen(text)::BIGINT AS doc_bytes
   FROM documents WHERE doc_id < {_MH_DOCS}
 )

@@ -410,3 +410,221 @@ def test_save_exchange_salt_bounds_hot_term_under_zipf(spark):
     b = sorted(map(tuple, _doc_term_freqs(docs)
                    .select("doc_id", "term", "tf", "dl").collect()))
     assert a == b and len(a) == salted.count()
+
+
+EDGE_DOCS = DOCS + [
+    (5, "   "),                      # term-less: in lengths, not postings
+    (6, None),                       # NULL text: counted in N, no dl
+    (7, "Spark SQL Engine"),         # upper-case text
+]
+EDGE_QUERIES = [
+    (0, ["spark", "engine", "spark"]),   # repeated term: qtf 2
+    (1, ["SQL"]),                        # upper-case term
+    (2, ["room", None]),                 # NULL inside the terms array
+    (3, []),                             # empty terms array
+    (4, ["nosuchterm"]),                 # only unknown terms
+    (5, None),                           # NULL terms array
+]
+
+
+def _reference_scores(rows, queries, k1=1.2, b=0.75):
+    """Pure-Python BM25 over the same conventions: N counts every doc,
+    avgdl averages the docs that have a length (NULL text has none),
+    query terms lower-cased with NULLs skipped, bag weighting."""
+    toks = {d: (t.lower().split() if t is not None else None)
+            for d, t in rows}
+    n = len(toks)
+    lens = [len(w) for w in toks.values() if w is not None]
+    avgdl = sum(lens) / len(lens)
+    df = {}
+    for w in toks.values():
+        for t in set(w or ()):
+            df[t] = df.get(t, 0) + 1
+    out = {}
+    for q, terms in queries:
+        qtf = {}
+        for t in terms or ():
+            if t is not None:
+                qtf[t.lower()] = qtf.get(t.lower(), 0) + 1
+        for d, w in toks.items():
+            s = 0.0
+            hit = False
+            for t, c in qtf.items():
+                tf = (w or []).count(t)
+                if tf:
+                    hit = True
+                    idf = math.log(1 + (n - df[t] + 0.5) / (df[t] + 0.5))
+                    s += c * idf * tf * (k1 + 1) / (
+                        tf + k1 * (1 - b + b * len(w) / avgdl))
+            if hit:
+                out[(q, d)] = s
+    return out
+
+
+def test_disk_index_matches_inflight_edge_cases(spark, tmp_path):
+    """The saved index (manifest stats as literals, isin pushdown) and
+    the in-flight scorers (one stats aggregate at construction) return
+    identical rows, and both match a pure-Python BM25, across the
+    edge cases: a term-less doc, a NULL-text doc, a repeated query
+    term, upper-case text and terms, a NULL inside a terms array, an
+    empty and a NULL terms array, a query of unknown terms only, an
+    empty query table, and an int32 ``query_id``."""
+    from pyspark.sql.types import IntegerType
+
+    from python_vector_db___ai_spark.operators.bm25 import (
+        BM25Index,
+        bm25_index,
+        bm25_scores_batch,
+        bm25_topk_batch,
+        doc_lengths,
+        save_bm25_index,
+        term_df,
+    )
+
+    docs = spark.createDataFrame(EDGE_DOCS, "doc_id long, text string")
+    queries = spark.createDataFrame(
+        EDGE_QUERIES, "query_id int, terms array<string>")
+    idx = save_bm25_index(docs, str(tmp_path / "bm25"))
+    assert isinstance(idx, BM25Index)
+    post = bm25_index(docs)
+    forms = {"disk": idx, "inflight": None,
+             "tuple": (post, doc_lengths(docs), term_df(post)),
+             "pair": (post, doc_lengths(docs))}
+
+    tops = {name: bm25_topk_batch(docs, queries, k=10, prebuilt=pb)
+            for name, pb in forms.items()}
+    rows = {name: sorted(map(tuple, top.collect()))
+            for name, top in tops.items()}
+    assert rows["disk"] and all(r == rows["disk"] for r in rows.values())
+    for top in tops.values():
+        assert top.schema["query_id"].dataType == IntegerType()
+
+    ref = _reference_scores(EDGE_DOCS, EDGE_QUERIES)
+    for pb in forms.values():
+        got = {(r.query_id, r.doc_id): r.bm25 for r in
+               bm25_scores_batch(docs, queries, prebuilt=pb).collect()}
+        assert got.keys() == ref.keys()
+        for key, want in ref.items():
+            assert got[key] == pytest.approx(want, rel=1e-12), key
+    assert {q for q, _ in ref} == {0, 1, 2}
+    # qtf 2: "spark" counts twice in query 0
+    assert ref[(0, 2)] == pytest.approx(
+        2 * _reference_scores(EDGE_DOCS, [(0, ["spark"])])[(0, 2)])
+
+    empty = spark.createDataFrame([], "query_id int, terms array<string>")
+    for pb in forms.values():
+        assert bm25_topk_batch(docs, empty, prebuilt=pb).collect() == []
+
+
+def test_manifest_stats_equal_lengths_aggregate(spark, tmp_path):
+    """The stats the manifest records on the lengths write equal a
+    fresh aggregate over the saved lengths bit for bit, and
+    ``sum_dl / n_dl`` is Spark's ``avg(dl)`` exactly."""
+    import json
+
+    from python_vector_db___ai_spark.operators.bm25 import (
+        BM25_INDEX_VERSION,
+        save_bm25_index,
+    )
+
+    rows = EDGE_DOCS + [(10 + i, " ".join("w" * (1 + i % 3)
+                                          for _ in range(i % 11)))
+                        for i in range(40)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    path = tmp_path / "bm25"
+    idx = save_bm25_index(docs, str(path))
+    agg = idx.lengths.agg(F.count(F.lit(1)), F.count("dl"), F.sum("dl"),
+                          F.avg("dl")).first()
+    assert (idx.n_docs, idx.n_dl, idx.sum_dl) == tuple(agg[:3])
+    assert idx.sum_dl / idx.n_dl == agg[3]
+    assert idx.n_docs == len(rows) == idx.n_dl + 1
+
+    meta = json.loads((path / "_MANIFEST.json").read_text())
+    assert meta["version"] == BM25_INDEX_VERSION
+    assert (meta["n_docs"], meta["n_dl"], meta["sum_dl"]) == tuple(agg[:3])
+    assert set(meta["schemas"]) == {"postings", "lengths", "term_df"}
+    for frame, part in ((idx.postings, "postings"),
+                        (idx.lengths, "lengths"),
+                        (idx.term_df, "term_df")):
+        assert frame.schema == spark.read.parquet(str(path / part)).schema
+
+
+def _jobs(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_saved_index_job_counts(spark, tmp_path):
+    """Reloading runs no Spark job (no schema inference, stats from
+    the manifest); saving runs at most 7; a batch over the loaded
+    index runs one construction job, the query-table collect."""
+    from python_vector_db___ai_spark.operators.bm25 import (
+        bm25_topk_batch,
+        load_bm25_index,
+        save_bm25_index,
+    )
+
+    docs = spark.createDataFrame(EDGE_DOCS, "doc_id long, text string")
+    queries = spark.createDataFrame(
+        EDGE_QUERIES, "query_id int, terms array<string>").coalesce(1)
+    path = str(tmp_path / "bm25")
+    _, save_jobs = _jobs(spark, "bm25-save",
+                         lambda: save_bm25_index(docs, path))
+    idx, load_jobs = _jobs(spark, "bm25-load",
+                           lambda: load_bm25_index(spark, path))
+    top, construct_jobs = _jobs(
+        spark, "bm25-construct",
+        lambda: bm25_topk_batch(docs, queries, k=3, prebuilt=idx))
+    assert (load_jobs, construct_jobs) == (0, 1)
+    assert 1 <= save_jobs <= 7
+    assert top.count() > 0
+
+
+def test_load_refuses_incomplete_index(spark, tmp_path):
+    """A missing, truncated or wrong-version manifest is refused, and
+    so is a directory whose rewrite failed part-way (the old manifest
+    is deleted before any part is rewritten)."""
+    from python_vector_db___ai_spark.operators.bm25 import (
+        BM25_INDEX_VERSION,
+        _manifest,
+        _write_text,
+        load_bm25_index,
+        save_bm25_index,
+    )
+
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    path = tmp_path / "bm25"
+    save_bm25_index(docs, str(path))
+    manifest = path / "_MANIFEST.json"
+    good = manifest.read_text()
+    load_bm25_index(spark, str(path))
+
+    # rewritten through the same Hadoop FileSystem, so its checksum
+    # file stays consistent and only the content is wrong
+    def rewrite(text: str) -> None:
+        _write_text(_manifest(spark, str(path)), text)
+
+    rewrite(good[: len(good) // 2])
+    with pytest.raises(ValueError, match="not a complete BM25 index"):
+        load_bm25_index(spark, str(path))
+    rewrite(good.replace(f'"version": {BM25_INDEX_VERSION}',
+                         '"version": 999'))
+    with pytest.raises(ValueError, match="version 999"):
+        load_bm25_index(spark, str(path))
+    manifest.unlink()
+    with pytest.raises(ValueError, match="not a complete BM25 index"):
+        load_bm25_index(spark, str(path))
+
+    rewrite(good)
+    load_bm25_index(spark, str(path))
+    broken = docs.withColumn("text", F.raise_error(F.lit("boom")))
+    with pytest.raises(Exception, match="boom"):
+        save_bm25_index(broken, str(path))
+    assert not manifest.exists()
+    with pytest.raises(ValueError, match="not a complete BM25 index"):
+        load_bm25_index(spark, str(path))

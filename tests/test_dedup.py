@@ -196,6 +196,54 @@ def test_dedup_components_driver_path_few_jobs_no_state(spark):
     assert all(r.converged is True for r in rows)
 
 
+def _new_persisted(sc, before: set) -> set:
+    return set(sc._jsc.getPersistentRDDs().keys()) - before
+
+
+def test_dedup_components_releases_minhash_signature_cache(
+        spark, docs, components_path):
+    """``minhash_lsh_pairs`` caches its signature frame and hands it
+    over on its result; ``dedup_components`` unpersists it once the
+    edge list is read.  After the collect the driver path leaves
+    nothing persisted, the Spark path only what its result reads (the
+    edge list and the last round's labels)."""
+    from python_vector_db___ai_spark.operators.dedup import dedup_components
+
+    sc = spark.sparkContext
+    for path, left in (("driver", 0), ("spark", 2)):
+        before = set(sc._jsc.getPersistentRDDs().keys())
+        pairs = minhash_lsh_pairs(docs, verify_threshold=0.5)
+        assert pairs._cached_frames
+        with components_path(path):
+            rows = dedup_components(pairs, docs.select("doc_id"),
+                                    rounds=3).collect()
+        assert len(_new_persisted(sc, before)) == left, path
+        assert {r.doc_id: r.component_id for r in rows}[2] == 1
+
+
+def test_dedup_components_spark_path_keeps_only_last_round(
+        spark, components_path):
+    """Above the cap each round's checkpoint is released once the next
+    one is materialized: a 7-round call leaves the last round's labels
+    and, for the convergence probe, the edge list — not one RDD per
+    round."""
+    from python_vector_db___ai_spark.operators.dedup import dedup_components
+
+    sc = spark.sparkContext
+    ids = spark.createDataFrame([(i,) for i in range(12)], "doc_id long")
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(9)],
+                                  "i long, j long")
+    with components_path("spark"):
+        for check, left in ((True, 2), (False, 1)):
+            before = set(sc._jsc.getPersistentRDDs().keys())
+            rows = dedup_components(pairs, ids, rounds=7,
+                                    convergence_check=check).collect()
+            assert len(_new_persisted(sc, before)) == left, check
+            got = {r.doc_id: r.component_id for r in rows}
+            assert [got[i] for i in range(12)] == \
+                [0] * 8 + [1, 2, 10, 11]
+
+
 def test_embedding_neardup_blas_equals_expr(spark):
     """The broadcast-matmul all-pairs form returns exactly the
     expression θ-join's pairs (round-6 values, i<j, thresholded)."""

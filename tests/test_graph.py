@@ -43,6 +43,19 @@ def test_pagerank_isolated_nodes_hold_teleport_floor(spark):
     assert r[0] > r[2]
 
 
+def test_pagerank_keeps_only_last_round(spark):
+    """Each round's checkpoint is released once the next one is
+    materialized, and the edge list after the last round: a 7-round
+    call leaves only the returned ranks persisted."""
+    sc = spark.sparkContext
+    edges = spark.createDataFrame([(i, i + 1) for i in range(6)], ["i", "j"])
+    nodes = spark.createDataFrame([(i,) for i in range(8)], ["doc_id"])
+    before = set(sc._jsc.getPersistentRDDs().keys())
+    ranks = pagerank(edges, nodes, iters=7).collect()
+    assert len(set(sc._jsc.getPersistentRDDs().keys()) - before) == 1
+    assert sorted(r["doc_id"] for r in ranks) == list(range(8))
+
+
 def test_shared_shingle_edges_df_cap_blocks_hot_gram(spark):
     # 30 docs share one boilerplate 5-gram; only docs 0/1 truly overlap
     boiler = "the quick brown fox jumps"

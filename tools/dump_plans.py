@@ -47,11 +47,13 @@ SHOWCASE = [
      "min-aggregation on the id key"),
     ("bm25_rrf_hybrid",
      "hybrid retrieval: ONE cached inverted index (dl-carrying postings "
-     "+ lengths + term-df dictionary) feeds the single-query and batch "
-     "BM25 branches — scoring is a single postings scan (df from the "
-     "broadcast dictionary, dl riding the postings); broadcast 1-row "
-     "corpus stats; TakeOrderedAndProject global top-k / WindowGroupLimit "
-     "per-query top-k; one shared batch kNN for the vector side"),
+     "+ lengths + term-df dictionary) feeds the batch BM25 branch, and "
+     "the single-query branches are filtered from the batch - the query "
+     "table is a driver-built (query_id, term, qtf) LocalRelation "
+     "joined to the dictionary's df and broadcast into a single "
+     "postings scan (dl riding the postings); corpus stats are score "
+     "literals, no cross join; WindowGroupLimit per-query top-k; one "
+     "shared batch kNN for the vector side"),
     ("data_health_report",
      "melted monitoring report: ONE cached (event_type, half, bin) "
      "aggregate serves both the histogram branch (half-marginal) and "
