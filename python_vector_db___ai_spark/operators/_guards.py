@@ -11,6 +11,7 @@ a pointer at the distributed alternative.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 # Generous for a driver (100k rows x a ~1 KB vector ~ 100 MB) while
@@ -19,15 +20,17 @@ SMALL_SIDE_CAP = 100_000
 
 
 def collect_small(df: DataFrame, what: str, cap: int = SMALL_SIDE_CAP,
-                  hint: str | None = None) -> list:
-    """Collect ``df`` asserting it is small by contract.
+                  hint: str | None = None) -> pa.Table:
+    """Collect ``df`` as an Arrow table asserting it is small by contract.
 
-    One job: ``limit(cap + 1)`` bounds the transfer, so even a huge
-    frame costs one extra row, not an OOM.  Raises ``ValueError`` with
-    an actionable message when the cap is exceeded.
+    ``limit(cap + 1)`` bounds the transfer, so even a huge frame costs
+    one extra row, not an OOM; ``toArrow`` reads every partition in one
+    job (``collect`` runs an incremental take, one job per round of
+    partitions).  Raises ``ValueError`` with an actionable message when
+    the cap is exceeded.
     """
-    rows = df.limit(cap + 1).collect()
-    if len(rows) > cap:
+    rows = df.limit(cap + 1).toArrow()
+    if rows.num_rows > cap:
         msg = (f"{what}: expected a small side (<= {cap} rows) but got "
                f"more; collecting it would flood the driver.")
         if hint:

@@ -598,8 +598,8 @@ def bm25_scores_batch(docs: DataFrame, queries: DataFrame,
                         F.explode(F.col(terms_col)).alias("term"))
                 .select(query_id, F.lower(F.col("term")).alias("term"))
                 .filter(F.col("term").isNotNull()))
-    qtf = Counter(tuple(r) for r in
-                  collect_small(exploded, "bm25 batch query terms"))
+    qterms = collect_small(exploded, "bm25 batch query terms")
+    qtf = Counter(zip(*(c.to_pylist() for c in qterms.columns)))
     qtable = F.broadcast(queries.sparkSession.createDataFrame(
         pa.table({query_id: [q for q, _ in qtf], "term": [t for _, t in qtf],
                   "qtf": [float(n) for n in qtf.values()]}),

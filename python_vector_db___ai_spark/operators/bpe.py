@@ -81,7 +81,7 @@ def bpe_merge_list(word_freq: DataFrame,
                          hint="Lower max_vocab on word_frequencies().")
     # symbol string: chars separated by single spaces
     vocab: list[tuple[str, int]] = [
-        (" ".join(r["word"]), int(r["c"])) for r in rows]
+        (" ".join(r["word"]), int(r["c"])) for r in rows.to_pylist()]
 
     merges = []
     for rnd in range(1, n_merges + 1):

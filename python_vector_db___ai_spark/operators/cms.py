@@ -75,7 +75,7 @@ def cms_build(tokens: DataFrame, token_col: str = "token",
                          hint="One row per partition expected.")
     tab = np.zeros(depth * width, dtype=np.int64)
     n_tokens = 0
-    for r in rows:
+    for r in rows.to_pylist():
         tab += np.array(r["tab"], dtype=np.int64)
         n_tokens += r["n"]
     return tab.reshape(depth, width), n_tokens

@@ -34,6 +34,12 @@ from pyspark.sql import functions as F
 
 from python_vector_db___ai_spark.functions.hashing import md5_hex, stable_hash64
 from python_vector_db___ai_spark.functions.vector import cosine_similarity
+from python_vector_db___ai_spark.operators._kernels import (
+    id_array,
+    score,
+    small_side,
+    vector_matrix,
+)
 
 # Per-worker bound on the MinHash shingle-hash cache.  At ~200 B/entry
 # (50-100 B shingle key + int + dict slot), 2^18 entries is ~50 MB per
@@ -1181,54 +1187,41 @@ def semantic_decontaminate(train: DataFrame, benchmark: DataFrame,
     never pairs.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    from python_vector_db___ai_spark.operators._guards import collect_small
-
-    brows = collect_small(
-        benchmark.select(id_col, vec_col).orderBy(id_col),
-        "semantic_decontaminate benchmark",
+    b_ids, B = small_side(
+        benchmark, id_col, vec_col, "semantic_decontaminate benchmark",
         hint="The benchmark side is an eval set; batch it if larger.")
-    if not brows:
+    if not len(b_ids):
         return train.sparkSession.createDataFrame(
             [], f"{id_col} long, n_benchmark_hits long, "
                 "max_cosine double, nearest_benchmark_id long")
-    b_ids = np.array([r[id_col] for r in brows], dtype=np.int64)
-    B = np.array([r[vec_col] for r in brows], dtype=np.float64)
-    bn = np.linalg.norm(B, axis=1)
-    sc = train.sparkSession.sparkContext
-    bc = sc.broadcast((b_ids, B, bn))
+    bc = train.sparkSession.sparkContext.broadcast((b_ids, B))
 
-    def op(batches):
-        b_ids_, B_, bn_ = bc.value
-        for pdf in batches:
-            if pdf.empty:
+    def kernel(batches):
+        b_ids_, B_ = bc.value
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            T = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            t_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            tn = np.linalg.norm(T, axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                S = (T @ B_.T) / np.outer(tn, bn_)
-            S[(np.outer(tn <= 1e-12, np.ones(len(B_), bool)))
-              | (np.outer(np.ones(len(T), bool), bn_ <= 1e-12))] = 0.0
-            S = np.round(S, round_to)
-            hit = S >= threshold
-            n_hits = hit.sum(1)
+            S = score(vector_matrix(rb.column(1), "semantic_decontaminate"),
+                      B_, "cosine", round_to)
+            n_hits = (S >= threshold).sum(1)
             keep = n_hits > 0
             if not keep.any():
                 continue
             # nearest = max cosine, ties to the lower benchmark id
-            # (stable argmax over id-sorted columns)
+            # (argmax over id-sorted columns)
             nearest = np.argmax(S[keep], axis=1)
-            yield pd.DataFrame({
-                id_col: t_ids[keep],
-                "n_benchmark_hits": n_hits[keep].astype(np.int64),
-                "max_cosine": S[keep, nearest],
-                "nearest_benchmark_id": b_ids_[nearest]})
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(id_array(rb.column(0))[keep]),
+                 pa.array(n_hits[keep].astype(np.int64)),
+                 pa.array(S[keep, nearest]), pa.array(b_ids_[nearest])],
+                names=[id_col, "n_benchmark_hits", "max_cosine",
+                       "nearest_benchmark_id"])
 
-    return train.select(id_col, vec_col).mapInPandas(
-        op, schema=f"{id_col} long, n_benchmark_hits long, "
-                   "max_cosine double, nearest_benchmark_id long")
+    return train.select(id_col, vec_col).mapInArrow(
+        kernel, schema=f"{id_col} long, n_benchmark_hits long, "
+                       "max_cosine double, nearest_benchmark_id long")
 
 
 def embedding_neardup_pairs(df: DataFrame, threshold: float = 0.9,
@@ -1260,44 +1253,33 @@ def embedding_neardup_pairs(df: DataFrame, threshold: float = 0.9,
                 .select("i", "j", "cosine"))
 
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    from python_vector_db___ai_spark.operators._guards import collect_small
-
-    rows = collect_small(
-        df.select(id_col, vec_col).orderBy(id_col),
-        "embedding_neardup_pairs corpus",
+    ids, V = small_side(
+        df, id_col, vec_col, "embedding_neardup_pairs corpus",
         hint="The all-pairs form is the small-sf oracle; use "
              "embedding_neardup_pruned for large corpora.")
-    if not rows:
+    if not len(ids):
         return df.sparkSession.createDataFrame(
             [], "i long, j long, cosine double")
-    ids = np.array([r[id_col] for r in rows], dtype=np.int64)
-    V = np.array([r[vec_col] for r in rows], dtype=np.float64)
-    vn = np.linalg.norm(V, axis=1)
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast((ids, V, vn))
+    bc = df.sparkSession.sparkContext.broadcast((ids, V))
 
-    def op(batches):
-        ids_, V_, vn_ = bc.value
-        for pdf in batches:
-            if pdf.empty:
+    def kernel(batches):
+        ids_, V_ = bc.value
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            A = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            a_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            an = np.linalg.norm(A, axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                S = (A @ V_.T) / np.outer(an, vn_)
-            S[(np.outer(an <= 1e-12, np.ones(len(V_), bool)))
-              | (np.outer(np.ones(len(A), bool), vn_ <= 1e-12))] = 0.0
-            S = np.round(S, round_to)
-            keep = (ids_[None, :] > a_ids[:, None]) & (S >= threshold)
-            r, c = np.nonzero(keep)
-            yield pd.DataFrame({"i": a_ids[r], "j": ids_[c],
-                                "cosine": S[r, c]})
+            a_ids = id_array(rb.column(0))
+            S = score(vector_matrix(rb.column(1), "embedding_neardup_pairs"),
+                      V_, "cosine", round_to)
+            r, c = np.nonzero((ids_[None, :] > a_ids[:, None])
+                              & (S >= threshold))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(a_ids[r]), pa.array(ids_[c]), pa.array(S[r, c])],
+                names=["i", "j", "cosine"])
 
-    return df.select(id_col, vec_col).mapInPandas(
-        op, schema="i long, j long, cosine double")
+    return df.select(id_col, vec_col).mapInArrow(
+        kernel, schema="i long, j long, cosine double")
 
 
 def embedding_neardup_pruned(df: DataFrame, threshold: float = 0.4,
@@ -1318,6 +1300,7 @@ def embedding_neardup_pruned(df: DataFrame, threshold: float = 0.4,
     """
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
 
     from python_vector_db___ai_spark.operators.ivf import (
         build_centroids,
@@ -1341,14 +1324,8 @@ def embedding_neardup_pruned(df: DataFrame, threshold: float = 0.4,
             return pd.DataFrame({"i": [], "j": [], "cosine": []})
         pdf = pdf.sort_values("_pid")
         ids = pdf["_pid"].to_numpy(dtype=np.int64)
-        V = np.array(pdf["_pvec"].tolist(), dtype=np.float64)
-        nrm = np.linalg.norm(V, axis=1)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            S = (V @ V.T) / np.outer(nrm, nrm)
-        bad = nrm <= 1e-12
-        S[bad, :] = 0.0
-        S[:, bad] = 0.0
-        S = np.round(S, round_to)
+        V = vector_matrix(pa.array(pdf["_pvec"]), "embedding_neardup_pruned")
+        S = score(V, V, "cosine", round_to)
         iu = np.triu_indices(len(ids), 1)      # rows id-sorted -> i < j
         keep = S[iu] >= threshold
         return pd.DataFrame({"i": ids[iu[0][keep]],

@@ -36,10 +36,17 @@ import hashlib
 import heapq
 import math
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from python_vector_db___ai_spark.operators._guards import collect_small
+from python_vector_db___ai_spark.operators._kernels import (
+    id_array,
+    local_topk,
+    small_side,
+    vector_matrix,
+)
 from python_vector_db___ai_spark.operators._ranking import topk_window
 
 _MAX_LEVEL = 8
@@ -202,6 +209,41 @@ def _build_graph(V, M, ef_construction, m_l):
     return nbrs, entry, top
 
 
+def _unit_rows(V):
+    """Rows scaled to unit norm; (near-)zero rows pass through."""
+    n = np.linalg.norm(V, axis=1)
+    return V / np.where(n > 1e-12, n, 1.0)[:, None]
+
+
+def _graph_topk(V, ids, nbrs, entry, top, Q, q_ids, k, ef_search,
+                round_to, names):
+    """Answer every query row of ``Q`` from one partition graph — the
+    layered beam walk, then ``local_topk`` over the beam — as one
+    RecordBatch ``names``.  Scores are rounded BEFORE the local
+    k-truncation and ties break on (rounded score DESC, id ASC), the
+    ordering the global merge and the DuckDB oracles apply: cutting on
+    raw floats can keep the wrong member of a rounds-equal tie at the
+    k boundary.  Shared by ``hnsw_knn`` and the persisted-index
+    ``index_store.hnsw_search``."""
+    if len(V) == 1:
+        return local_topk(np.round(Q @ V[0], round_to)[:, None], ids,
+                          q_ids, k, True, names)
+    rbs = []
+    for qi in range(len(Q)):
+        q = Q[qi]
+        ep = [entry]
+        for layer in range(top, 0, -1):
+            ep = [_search_layer(V, nbrs[layer], ep, q, 1)[0][1]]
+        sims, nodes = zip(*_search_layer(V, nbrs[0], ep, q,
+                                         max(ef_search, k)))
+        rbs.append(local_topk(np.round([sims], round_to),
+                              ids[list(nodes)], q_ids[qi:qi + 1], k, True,
+                              names))
+    return pa.RecordBatch.from_arrays(
+        [pa.concat_arrays([rb.column(i) for rb in rbs]) for i in range(3)],
+        names=list(names))
+
+
 def hnsw_knn(queries: DataFrame, corpus: DataFrame, k: int = 10,
              M: int = 8, ef_construction: int = 64, ef_search: int = 64,
              metric: str = "cosine",
@@ -215,25 +257,18 @@ def hnsw_knn(queries: DataFrame, corpus: DataFrame, k: int = 10,
     as ``knn_join_blas`` / ``ivf_search`` so
     ``recall_against_exact`` composes directly.
     """
-    import numpy as np
-    import pandas as pd
-
     if metric not in ("cosine", "dot"):
         raise ValueError(f"unsupported metric {metric!r}")
-    qrows = collect_small(
-        queries.select(query_id, query_vec).orderBy(query_id),
-        "hnsw_knn queries",
+    q_ids, Q = small_side(
+        queries, query_id, query_vec, "hnsw_knn queries",
         hint="The query side is small by contract; batch it if larger.")
     spark = corpus.sparkSession
-    if not qrows:
+    if not len(q_ids):
         return spark.createDataFrame(
             [], f"{query_id} long, {corpus_id} long, score double, "
                 "rank long")
-    q_ids = np.array([r[query_id] for r in qrows], dtype=np.int64)
-    Q = np.array([r[query_vec] for r in qrows], dtype=np.float64)
     if metric == "cosine":
-        qn = np.linalg.norm(Q, axis=1)
-        Q = Q / np.where(qn > 1e-12, qn, 1.0)[:, None]
+        Q = _unit_rows(Q)
     bc = spark.sparkContext.broadcast((q_ids, Q))
     m_l = 1.0 / math.log(M)
 
@@ -241,42 +276,23 @@ def hnsw_knn(queries: DataFrame, corpus: DataFrame, k: int = 10,
     if n_partitions:
         part = part.repartition(n_partitions, F.col(corpus_id))
 
-    def op(batches):
-        pdfs = [p for p in batches if not p.empty]
-        if not pdfs:
+    def kernel(batches):
+        rbs = [rb for rb in batches if rb.num_rows]
+        if not rbs:
             return
-        pdf = pd.concat(pdfs, ignore_index=True).sort_values(corpus_id)
-        ids = pdf[corpus_id].to_numpy(dtype=np.int64)
-        V = np.array(pdf[corpus_vec].tolist(), dtype=np.float64)
+        t = pa.Table.from_batches(rbs)
+        ids = id_array(t.column(0))
+        order = np.argsort(ids, kind="stable")
+        ids = ids[order]
+        V = vector_matrix(t.column(1), "hnsw_knn")[order]
         if metric == "cosine":
-            vn = np.linalg.norm(V, axis=1)
-            V = V / np.where(vn > 1e-12, vn, 1.0)[:, None]
+            V = _unit_rows(V)
+        nbrs, entry, top = (_build_graph(V, M, ef_construction, m_l)
+                            if len(V) > 1 else (None, 0, 0))
         q_ids_, Q_ = bc.value
-        if len(V) == 1:
-            sims = (Q_ @ V[0])[:, None]
-            out = pd.DataFrame({
-                query_id: q_ids_,
-                corpus_id: np.full(len(q_ids_), ids[0]),
-                "score": sims[:, 0]})
-            yield out
-            return
-        nbrs, entry, top = _build_graph(V, M, ef_construction, m_l)
-        rows_q, rows_c, rows_s = [], [], []
-        for qi in range(len(Q_)):
-            q = Q_[qi]
-            ep = [entry]
-            for layer in range(top, 0, -1):
-                ep = [_search_layer(V, nbrs[layer], ep, q, 1)[0][1]]
-            found = _search_layer(V, nbrs[0], ep, q, max(ef_search, k))
-            for s, node in found[:k]:
-                rows_q.append(q_ids_[qi])
-                rows_c.append(ids[node])
-                rows_s.append(s)
-        yield pd.DataFrame({query_id: np.array(rows_q, dtype=np.int64),
-                            corpus_id: np.array(rows_c, dtype=np.int64),
-                            "score": np.array(rows_s, dtype=np.float64)})
+        yield _graph_topk(V, ids, nbrs, entry, top, Q_, q_ids_, k,
+                          ef_search, round_to, (query_id, corpus_id, "score"))
 
-    local = part.mapInPandas(
-        op, schema=f"{query_id} long, {corpus_id} long, score double")
-    scored = local.withColumn("score", F.round("score", round_to))
-    return topk_window(scored, k, query_id, corpus_id, score_col="score")
+    local = part.mapInArrow(
+        kernel, schema=f"{query_id} long, {corpus_id} long, score double")
+    return topk_window(local, k, query_id, corpus_id, score_col="score")

@@ -35,7 +35,18 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from python_vector_db___ai_spark.operators._guards import collect_small
+from python_vector_db___ai_spark.operators._kernels import (
+    id_array,
+    small_side,
+    vector_matrix,
+)
+from python_vector_db___ai_spark.operators.hnsw import (
+    _build_graph,
+    _graph_topk,
+    _insert_node,
+    _node_level,
+    _unit_rows,
+)
 from python_vector_db___ai_spark.operators._ranking import topk_window
 
 _INDEX_SCHEMA = ("part_id int, seq int, vec_id long, vec array<double>, "
@@ -89,11 +100,6 @@ def hnsw_build_index(corpus: DataFrame, n_partitions: int = 32,
     import numpy as np
     import pandas as pd
 
-    from python_vector_db___ai_spark.operators.hnsw import (
-        _build_graph,
-        _node_level,
-    )
-
     if metric not in ("cosine", "dot"):
         raise ValueError(f"unsupported metric {metric!r}")
     m_l = 1.0 / math.log(M)
@@ -111,8 +117,7 @@ def hnsw_build_index(corpus: DataFrame, n_partitions: int = 32,
             ids = pdf[corpus_id].to_numpy(dtype=np.int64)
             V = np.array(pdf[corpus_vec].tolist(), dtype=np.float64)
             if metric == "cosine":
-                vn = np.linalg.norm(V, axis=1)
-                V = V / np.where(vn > 1e-12, vn, 1.0)[:, None]
+                V = _unit_rows(V)
             n = len(V)
             levels = [_node_level(i, m_l) for i in range(n)]
             if n == 1:
@@ -168,12 +173,6 @@ def hnsw_upsert(index: DataFrame, batch: DataFrame,
     import numpy as np
     import pandas as pd
 
-    from python_vector_db___ai_spark.operators.hnsw import (
-        _build_graph,
-        _insert_node,
-        _node_level,
-    )
-
     if metric not in ("cosine", "dot"):
         raise ValueError(f"unsupported metric {metric!r}")
     m_l = 1.0 / math.log(M)
@@ -212,8 +211,7 @@ def hnsw_upsert(index: DataFrame, batch: DataFrame,
             Vn = np.array(new["vec"].tolist(), dtype=np.float64) \
                 if n_new else np.empty((0, 0))
             if n_new and metric == "cosine":
-                norm = np.linalg.norm(Vn, axis=1)
-                Vn = Vn / np.where(norm > 1e-12, norm, 1.0)[:, None]
+                Vn = _unit_rows(Vn)
             if (n_old and n_new
                     and new["vec_id"].isin(old["vec_id"]).any()):
                 # TRUE upsert: a batch id already exists here, and the
@@ -368,91 +366,56 @@ def hnsw_search(queries: DataFrame, index: DataFrame, k: int = 10,
     per-query cost stays partitions × ef evaluations).
     """
     import numpy as np
-    import pandas as pd
-
-    from python_vector_db___ai_spark.operators.hnsw import _search_layer
+    import pyarrow as pa
 
     if metric not in ("cosine", "dot"):
         raise ValueError(f"unsupported metric {metric!r}")
-    qrows = collect_small(
-        queries.select(query_id, query_vec).orderBy(query_id),
-        "hnsw_search queries",
+    q_ids, Q = small_side(
+        queries, query_id, query_vec, "hnsw_search queries",
         hint="The query side is small by contract; batch it if larger.")
     spark = index.sparkSession
-    if not qrows:
+    if not len(q_ids):
         return spark.createDataFrame(
             [], f"{query_id} long, {corpus_id} long, score double, "
                 "rank long")
-    q_ids = np.array([r[query_id] for r in qrows], dtype=np.int64)
-    Q = np.array([r[query_vec] for r in qrows], dtype=np.float64)
     if metric == "cosine":
-        qn = np.linalg.norm(Q, axis=1)
-        Q = Q / np.where(qn > 1e-12, qn, 1.0)[:, None]
+        Q = _unit_rows(Q)
     bc = spark.sparkContext.broadcast((q_ids, Q))
 
     # Co-locate each graph's rows (a parquet read may split or mix
     # part_ids across input splits), then answer queries per graph.
-    part = index.repartition(F.col("part_id"))
+    part = index.select("part_id", "seq", "vec_id", "vec", "entry_seq",
+                        "top_level", "nbrs").repartition(F.col("part_id"))
 
-    def op(batches):
-        pdfs = [p for p in batches if not p.empty]
-        if not pdfs:
+    def kernel(batches):
+        rbs = [rb for rb in batches if rb.num_rows]
+        if not rbs:
             return
-        allp = pd.concat(pdfs, ignore_index=True)
+        t = pa.Table.from_batches(rbs)
         q_ids_, Q_ = bc.value
-        for _, pdf in allp.groupby("part_id", sort=True):
-            pdf = pdf.sort_values("seq")
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            V = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            top = int(pdf["top_level"].iloc[0])
-            entry = int(pdf["entry_seq"].iloc[0])
-            n = len(V)
-            if n == 1:
-                sims = (Q_ @ V[0])[:, None]
-                yield pd.DataFrame({
-                    query_id: q_ids_,
-                    corpus_id: np.full(len(q_ids_), ids[0]),
-                    "score": sims[:, 0]})
-                continue
+        pids = t.column(0).to_numpy()
+        for pid in np.unique(pids):
+            g = t.filter(pa.array(pids == pid))
+            order = np.argsort(g.column(1).to_numpy(), kind="stable")
+            g = g.take(order)
+            ids = id_array(g.column(2))
+            V = vector_matrix(g.column(3), "hnsw_search")
+            entry = g.column(4)[0].as_py()
+            top = g.column(5)[0].as_py()
             # nbrs[layer][node]: persisted lists for layers <= level,
             # empty above (matching the build-side shape).
-            node_lists = pdf["nbrs"].tolist()
-            nbrs = [[list(node_lists[i][layer])
+            node_lists = g.column(6).to_pylist()
+            nbrs = [[node_lists[i][layer]
                      if layer < len(node_lists[i]) else []
-                     for i in range(n)]
+                     for i in range(len(ids))]
                     for layer in range(top + 1)]
-            rows_q, rows_c, rows_s = [], [], []
-            for qi in range(len(Q_)):
-                q = Q_[qi]
-                ep = [entry]
-                for layer in range(top, 0, -1):
-                    ep = [_search_layer(V, nbrs[layer], ep, q, 1)[0][1]]
-                found = _search_layer(V, nbrs[0], ep, q, max(ef_search, k))
-                # Round BEFORE the local k-truncation and tie-break on
-                # (rounded score DESC, vec_id ASC) — the same ordering
-                # knn_join_blas applies pre-truncation and the DuckDB
-                # lifecycle oracle ranks by.  Truncating on RAW floats
-                # can drop the wrong member of a rounds-equal tie at
-                # the k boundary (tie-dense corpora: 500-copy probes).
-                f_nd = np.array([node for _, node in found],
-                                dtype=np.int64)
-                f_sc = np.round(
-                    np.array([s for s, _ in found], dtype=np.float64),
-                    round_to)
-                sel = np.lexsort((ids[f_nd], -f_sc))[:k]
-                for j in sel:
-                    rows_q.append(q_ids_[qi])
-                    rows_c.append(ids[f_nd[j]])
-                    rows_s.append(f_sc[j])
-            yield pd.DataFrame({
-                query_id: np.array(rows_q, dtype=np.int64),
-                corpus_id: np.array(rows_c, dtype=np.int64),
-                "score": np.array(rows_s, dtype=np.float64)})
+            yield _graph_topk(V, ids, nbrs, entry, top, Q_, q_ids_, k,
+                              ef_search, round_to,
+                              (query_id, corpus_id, "score"))
 
-    local = part.mapInPandas(
-        op, schema=f"{query_id} long, {corpus_id} long, score double")
-    scored = local.withColumn("score", F.round("score", round_to))
-    return topk_window(scored, k, query_id, corpus_id, score_col="score")
+    local = part.mapInArrow(
+        kernel, schema=f"{query_id} long, {corpus_id} long, score double")
+    return topk_window(local, k, query_id, corpus_id, score_col="score")
 
 
 def ivf_append(batch: DataFrame, centroids: DataFrame, path: str,

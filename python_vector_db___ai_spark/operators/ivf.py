@@ -19,15 +19,32 @@ Cluster assignments come either from an existing column (the test
 tables ship a ``label``) or from the trained coarse quantizer:
 :func:`kmeans_centroids` (spherical k-means on a driver-side sample,
 mirroring the FAISS quantizer training) + :func:`assign_clusters`.
+
+The probe, the pruned scan and list assignment are ``mapInArrow``
+kernels over ``operators/_kernels.py`` (one vector read, one metric
+scorer, one exact tie-preserving local top-k); :func:`ivf_search`
+merges the per-batch candidates with the shared
+``_ranking.topk_window``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from python_vector_db___ai_spark.functions.inline import inline_table
-from python_vector_db___ai_spark.functions.vector import DESCENDING_METRICS
+from python_vector_db___ai_spark.operators._guards import collect_small
+from python_vector_db___ai_spark.operators._kernels import (
+    descending,
+    id_array,
+    local_topk,
+    score,
+    small_side,
+    vector_matrix,
+)
+from python_vector_db___ai_spark.operators._ranking import topk_window
 from python_vector_db___ai_spark.operators.search import score_column
 
 
@@ -75,7 +92,7 @@ def probe_clusters(queries: DataFrame, centroids: DataFrame, nprobe: int = 3,
     order exactly as the window's default null ordering did
     (descending → nulls last, ascending → nulls first).
     """
-    desc = metric in DESCENDING_METRICS
+    desc = descending(metric)
 
     def _scored(c):
         s, _ = score_column(metric, F.col(query_vec), c["c"])
@@ -135,10 +152,7 @@ def ivf_search(queries: DataFrame, corpus: DataFrame,
     """
     if centroids is None:
         centroids = build_centroids(corpus, cluster_col, corpus_vec, round_to)
-    desc_order = metric in ("cosine", "inner_product", "euclidean_similarity")
-    w = Window.partitionBy(query_id).orderBy(
-        F.col("score").desc() if desc_order else F.col("score").asc(),
-        F.col(corpus_id).asc())
+    desc = descending(metric)
 
     # The probe table is driver-small by contract (it gets collected
     # either way); for the cosine quantizer compute it directly on the
@@ -147,66 +161,44 @@ def ivf_search(queries: DataFrame, corpus: DataFrame,
     # (two Spark jobs) into one numpy matmul, so the whole search is a
     # single job.
     if metric == "cosine":
-        probes = _probe_rows_driver(queries, centroids, nprobe, query_id,
-                                    query_vec, cluster_col, round_to)
+        q_ids, Q, qi, labs = _probe_rows_driver(
+            queries, centroids, nprobe, query_id, query_vec, cluster_col,
+            round_to)
+        probes = (q_ids[qi], Q[qi], labs)
     else:
         probes = probe_clusters(queries, centroids, nprobe, metric,
                                 query_id, query_vec, cluster_col, round_to)
     scored = _pruned_matmul_topk(
         probes, corpus, k, metric, query_id, query_vec,
-        corpus_id, corpus_vec, cluster_col, round_to or 6, desc_order)
+        corpus_id, corpus_vec, cluster_col, round_to or 6, desc)
     if dedup_candidates:
         # Scores of duplicates are identical (same rounded kernel), so
         # any one row per (query, candidate) is the right survivor.
         scored = scored.dropDuplicates([query_id, corpus_id])
-    return (scored
-            .withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .select(query_id, corpus_id, "score", "rank"))
+    return topk_window(scored, k, query_id, corpus_id, desc=desc)
 
 
 def _probe_rows_driver(queries: DataFrame, centroids: DataFrame,
                        nprobe: int, query_id: str, query_vec: str,
-                       cluster_col: str,
-                       round_to: int | None) -> list[dict]:
+                       cluster_col: str, round_to: int | None):
     """Driver-side cosine probe ranking — same convention as
-    probe_clusters and every BLAS kernel in this repo: round-to-6
-    scores ranked with a stable (score desc, cluster asc) order via
-    stable argsort over id-sorted centroids, computed as one numpy
-    matmul instead of a crossJoin + window Spark job.  Both inputs
-    are small by contract (guarded).  (As with the other kernels,
-    numpy and JVM summation/rounding agree at 6 decimals in practice;
-    a value landing exactly on a rounding boundary is the shared
-    theoretical caveat, not specific to this path.)"""
-    import numpy as np
-
-    from python_vector_db___ai_spark.operators._guards import collect_small
-
-    qrows = collect_small(
-        queries.select(query_id, query_vec), "ivf_search queries",
+    probe_clusters and every BLAS kernel in this repo: rounded scores
+    ranked by (score desc, cluster asc) through ``local_topk``,
+    computed as one numpy matmul instead of a crossJoin + window Spark
+    job.  Both inputs are small by contract (guarded).  Returns
+    ``(q_ids, Q, qi, labels)``: the id-sorted query batch and, per
+    probe, the query's row in ``Q`` and the probed cluster."""
+    q_ids, Q = small_side(
+        queries, query_id, query_vec, "ivf_search queries",
         hint="Query batches are small by contract; batch the queries.")
-    crows = sorted(collect_small(
-        centroids, "ivf_search centroids",
-        hint="nlist must stay driver-small."), key=lambda r: r[cluster_col])
-    if not qrows or not crows:
-        return []
-    labs = [r[cluster_col] for r in crows]
-    C = np.array([r["centroid"] for r in crows], dtype=np.float64)
-    cn = np.linalg.norm(C, axis=1)
-    Q = np.array([r[query_vec] for r in qrows], dtype=np.float64)
-    qn = np.linalg.norm(Q, axis=1)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        S = (Q @ C.T) / np.outer(qn, cn)
-    S[(np.outer(qn <= 1e-12, np.ones(len(C), bool)))
-      | (np.outer(np.ones(len(Q), bool), cn <= 1e-12))] = 0.0
-    if round_to is not None:
-        S = np.round(S, round_to)
-    order = np.argsort(-S, axis=1, kind="stable")[:, :nprobe]
-    return [
-        {query_id: qrows[qi][query_id], query_vec: qrows[qi][query_vec],
-         cluster_col: labs[ci]}
-        for qi in range(len(qrows)) for ci in order[qi]
-    ]
+    labs, C = small_side(centroids, cluster_col, "centroid",
+                         "ivf_search centroids",
+                         hint="nlist must stay driver-small.")
+    if not len(q_ids) or not len(labs):
+        return q_ids, Q, np.empty(0, np.int64), labs
+    top = local_topk(score(Q, C, "cosine", round_to), labs,
+                     np.arange(len(Q)), nprobe, True)
+    return q_ids, Q, top.column(0).to_numpy(), top.column(1).to_numpy()
 
 
 def _pruned_matmul_topk(probes, corpus: DataFrame, k: int,
@@ -215,134 +207,70 @@ def _pruned_matmul_topk(probes, corpus: DataFrame, k: int,
                         round_to: int, desc: bool) -> DataFrame:
     """The scale-shaped IVF kernel: never materializes (query, candidate)
     pair rows.  The probe table (n_queries x nprobe — tiny; a DataFrame
-    to collect or pre-collected rows from :func:`_probe_rows_driver`)
-    is broadcast; the corpus scan is filtered to the union of probed
-    clusters (partition pruning on a cluster-partitioned table); each
-    Arrow batch groups rows by cluster and runs one BLAS matmul against
-    just that cluster's probing queries, emitting local top-k per query.
-    Arrow transfer = pruned corpus rows, once.
+    to collect, or ``(query ids, query vectors, clusters)`` arrays with
+    one entry per probe from :func:`_probe_rows_driver`) is broadcast
+    as one query matrix per cluster; the corpus scan is filtered to the
+    union of probed clusters (partition pruning on a cluster-partitioned
+    table); each Arrow batch is sliced by cluster and each slice runs
+    one BLAS matmul against just that cluster's probing queries,
+    emitting local top-k per query.  Arrow transfer = pruned corpus
+    rows, once.
     """
-    import numpy as np
-    import pandas as pd
-
-    if metric not in ("cosine", "l2", "inner_product", "neg_inner_product",
-                      "euclidean_similarity"):
-        raise ValueError(f"metric {metric!r} not supported by the pruned "
-                         "BLAS kernel")
-
-    from python_vector_db___ai_spark.operators._guards import collect_small
-
     if isinstance(probes, DataFrame):
-        probe_rows = collect_small(
+        t = collect_small(
             probes, "ivf_search probe table",
             hint="nprobe x n_queries must stay driver-small; batch the "
                  "queries.")
-    else:
-        probe_rows = probes
-    by_label: dict = {}
-    for r in probe_rows:
-        by_label.setdefault(r[cluster_col], []).append(
-            (r[query_id], np.array(r[query_vec], dtype=np.float64)))
-    qmap = {
-        lab: (np.array([q for q, _ in rows], dtype=np.int64),
-              np.stack([v for _, v in rows]))
-        for lab, rows in by_label.items()
-    }
-    labels = sorted(by_label)
-    sc = corpus.sparkSession.sparkContext
-    bc = sc.broadcast(qmap)
+        probes = (id_array(t.column(0)),
+                  vector_matrix(t.column(1), "ivf_search probe table"),
+                  t.column(2).to_numpy())
+    p_ids, P, p_labs = probes
+    qmap = {lab: (p_ids[p_labs == lab], P[p_labs == lab])
+            for lab in np.unique(p_labs)}
+    bc = corpus.sparkSession.sparkContext.broadcast(qmap)
+    names = (query_id, corpus_id, "score")
 
     def kernel(batches):
-        for pdf in batches:
-            if pdf.empty:
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            out = []
-            for lab, sub in pdf.groupby(cluster_col, sort=False):
-                entry = bc.value.get(lab)
-                if entry is None:
-                    continue
-                q_ids, Q = entry
-                C = np.array(sub[corpus_vec].tolist(), dtype=np.float64)
-                c_ids = sub[corpus_id].to_numpy(dtype=np.int64)
-                if metric == "cosine":
-                    qn = np.linalg.norm(Q, axis=1)
-                    cn = np.linalg.norm(C, axis=1)
-                    denom = np.outer(qn, cn)
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        S = (Q @ C.T) / denom
-                    S[(np.outer(qn <= 1e-12, np.ones(len(C), bool)))
-                      | (np.outer(np.ones(len(Q), bool), cn <= 1e-12))] = 0.0
-                elif metric in ("l2", "euclidean_similarity"):
-                    sq = (np.sum(Q * Q, axis=1)[:, None]
-                          + np.sum(C * C, axis=1)[None, :] - 2.0 * (Q @ C.T))
-                    S = np.sqrt(np.clip(sq, 0.0, None))
-                    if metric == "euclidean_similarity":
-                        S = 1.0 / (1.0 + S)
-                elif metric == "neg_inner_product":
-                    S = -(Q @ C.T)
-                else:           # inner_product (validated above)
-                    S = Q @ C.T
-                S = np.round(S, round_to)
-                kk = min(k, len(c_ids))
-                for qi in range(len(q_ids)):
-                    keys = -S[qi] if desc else S[qi]
-                    order = np.lexsort((c_ids, keys))[:kk]
-                    out.append(pd.DataFrame({
-                        query_id: np.full(len(order), q_ids[qi]),
-                        corpus_id: c_ids[order],
-                        "score": S[qi][order]}))
-            if out:
-                yield pd.concat(out, ignore_index=True)
+            labs = rb.column(0).to_numpy()
+            C = vector_matrix(rb.column(2), "ivf_search corpus")
+            c_ids = id_array(rb.column(1))
+            order = np.argsort(labs, kind="stable")
+            cuts, = np.nonzero(np.diff(labs[order]))
+            for rows in np.split(order, cuts + 1):
+                q_ids, Q = bc.value[labs[rows[0]]]
+                yield local_topk(score(Q, C[rows], metric, round_to),
+                                 c_ids[rows], q_ids, k, desc, names)
 
-    pruned = (corpus.filter(F.col(cluster_col).isin(labels))
+    pruned = (corpus.filter(F.col(cluster_col).isin(sorted(qmap)))
               .select(cluster_col, corpus_id, corpus_vec))
-    return pruned.mapInPandas(
+    return pruned.mapInArrow(
         kernel, schema=f"{query_id} long, {corpus_id} long, score double")
 
 
-def _score_pairs_blas(pairs: DataFrame, k: int, metric: str, query_id: str,
+def _score_pairs_blas(pairs: DataFrame, metric: str, query_id: str,
                       query_vec: str, corpus_id: str, corpus_vec: str,
-                      round_to: int, desc: bool) -> DataFrame:
-    """Vectorized (query, candidate) pair scoring + per-batch local
-    top-k — the Arrow-side half of the pruned IVF scan."""
-    import numpy as np
+                      round_to: int) -> DataFrame:
+    """Vectorized (query, candidate) pair scoring — the Arrow-side half
+    of every re-rank; the caller's ``topk_window`` selects."""
+    descending(metric)
 
-    if metric not in ("cosine", "l2", "inner_product", "neg_inner_product",
-                      "euclidean_similarity"):
-        raise ValueError(f"metric {metric!r} not supported by the BLAS path")
+    def kernel(batches):
+        for rb in batches:
+            if rb.num_rows:
+                yield pa.RecordBatch.from_arrays(
+                    [rb.column(0).cast(pa.int64()),
+                     rb.column(1).cast(pa.int64()),
+                     pa.array(score(vector_matrix(rb.column(2), "pairs"),
+                                    vector_matrix(rb.column(3), "pairs"),
+                                    metric, round_to, paired=True))],
+                    names=[query_id, corpus_id, "score"])
 
-    def op(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            Q = np.array(pdf[query_vec].tolist(), dtype=np.float64)
-            C = np.array(pdf[corpus_vec].tolist(), dtype=np.float64)
-            dot = np.einsum("ij,ij->i", Q, C)
-            if metric == "cosine":
-                qn = np.linalg.norm(Q, axis=1)
-                cn = np.linalg.norm(C, axis=1)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    s = dot / (qn * cn)
-                s[(qn <= 1e-12) | (cn <= 1e-12)] = 0.0
-            elif metric in ("l2", "euclidean_similarity"):
-                s = np.sqrt(np.clip(
-                    np.einsum("ij,ij->i", Q, Q)
-                    + np.einsum("ij,ij->i", C, C) - 2.0 * dot, 0.0, None))
-                if metric == "euclidean_similarity":
-                    s = 1.0 / (1.0 + s)
-            elif metric == "neg_inner_product":
-                s = -dot
-            else:
-                s = dot
-            out = pdf[[query_id, corpus_id]].copy()
-            out["score"] = np.round(s, round_to)
-            out = out.sort_values(
-                [query_id, "score", corpus_id],
-                ascending=[True, not desc, True])
-            yield out.groupby(query_id, sort=False).head(k)
-
-    return pairs.mapInPandas(
-        op, schema=f"{query_id} long, {corpus_id} long, score double")
+    return pairs.select(query_id, corpus_id, query_vec, corpus_vec) \
+        .mapInArrow(kernel,
+                    schema=f"{query_id} long, {corpus_id} long, score double")
 
 
 def recall_against_exact(approx: DataFrame, exact: DataFrame,
@@ -372,8 +300,6 @@ def _lloyd(X, n_codes: int, iters: int, seed: int):
     n x n_codes x dim broadcast.  Empty clusters re-seed from the
     farthest points — the standard FAISS-style fixup, deterministic
     because distances and indices are."""
-    import numpy as np
-
     rng = np.random.default_rng(seed)
     n = len(X)
     init = rng.choice(n, size=min(n_codes, n), replace=False)
@@ -404,27 +330,6 @@ def _lloyd(X, n_codes: int, iters: int, seed: int):
     return C
 
 
-def _vector_matrix(vecs, what: str):
-    """An Arrow list column of equal-length numeric vectors -> a
-    zero-copy ``(n, dim)`` numpy matrix of its storage type (``n > 0``).
-    ``flatten()`` honours a sliced array's offsets (``.values`` does
-    not).  A null or ragged vector raises ``ValueError``."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    if isinstance(vecs, pa.ChunkedArray):
-        vecs = vecs.combine_chunks()
-    n = len(vecs)
-    flat = vecs.flatten()
-    if vecs.null_count or flat.null_count:
-        raise ValueError(f"{what}: null vector or vector element")
-    lens = pc.list_value_length(vecs)
-    dim = pc.min(lens).as_py()
-    if pc.max(lens).as_py() != dim:
-        raise ValueError(f"{what}: ragged vectors (lengths differ)")
-    return flat.to_numpy(zero_copy_only=False).reshape(n, dim)
-
-
 def kmeans_centroids(corpus: DataFrame, nlist: int = 10, seed: int = 42,
                      vec_col: str = "embedding",
                      cluster_col: str = "cluster_id",
@@ -444,8 +349,6 @@ def kmeans_centroids(corpus: DataFrame, nlist: int = 10, seed: int = 42,
     identical for the same input files, partitioning and ``seed``.
     Only the count and the sample scan run Spark jobs.
     """
-    import numpy as np
-
     from python_vector_db___ai_spark.operators._guards import SMALL_SIDE_CAP
     from python_vector_db___ai_spark.operators.pq import _maybe_normalize
 
@@ -457,8 +360,7 @@ def kmeans_centroids(corpus: DataFrame, nlist: int = 10, seed: int = 42,
     sample = vecs.limit(m).toArrow().column(0)
     if len(sample) == 0:
         raise ValueError("kmeans_centroids: empty corpus")
-    X = _maybe_normalize(_vector_matrix(sample, "kmeans_centroids")
-                         .astype(np.float64, copy=False), True)
+    X = _maybe_normalize(vector_matrix(sample, "kmeans_centroids"), True)
     C = _lloyd(X, nlist, max_iter, seed)
     rows = [(i, [float(x) for x in c]) for i, c in enumerate(C)]
     # VALUES-inlined LocalRelation: the centroids are deterministic
@@ -488,56 +390,38 @@ def assign_clusters(corpus: DataFrame, centroids: DataFrame,
     Arrow arrays — no per-row Python object on either side.  A null or
     ragged vector raises ``ValueError`` in the task.
     """
-    import numpy as np
-    import pyarrow as pa
-
     if metric != "cosine":
         raise ValueError("assign_clusters implements cosine only")
-    from python_vector_db___ai_spark.operators._guards import collect_small
-
-    crows = sorted(collect_small(
-        centroids, "assign_clusters centroids",
+    cids, C = small_side(
+        centroids, cluster_col, "centroid", "assign_clusters centroids",
         hint="nlist must stay driver-small; a quantizer this large "
-             "should be an IVF-of-IVF (coarse quantize the centroids)."),
-        key=lambda r: r[cluster_col])
-    cids = np.array([r[cluster_col] for r in crows], dtype=np.int32)
-    C = np.array([r["centroid"] for r in crows], dtype=np.float64)
-    cn = np.linalg.norm(C, axis=1)
-    sc = corpus.sparkSession.sparkContext
-    bc = sc.broadcast((cids, C, cn))
+             "should be an IVF-of-IVF (coarse quantize the centroids).")
+    bc = corpus.sparkSession.sparkContext.broadcast(
+        (cids.astype(np.int32), C))
 
-    def op(batches):
-        cids_, C_, cn_ = bc.value
+    def kernel(batches):
+        cids_, C_ = bc.value
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            V = _vector_matrix(rb.column(1), "assign_clusters").astype(
-                np.float64, copy=False)
-            vn = np.linalg.norm(V, axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                S = (V @ C_.T) / np.outer(vn, cn_)
-            S[(np.outer(vn <= 1e-12, np.ones(len(C_), bool)))
-              | (np.outer(np.ones(len(V), bool), cn_ <= 1e-12))] = 0.0
-            if round_to is not None:
-                S = np.round(S, round_to)
-            # stable argsort on -S: ties resolve to the lower cluster id
-            # because C_ rows are sorted by id — same (score desc,
-            # cluster asc) tie-break as probe_clusters.
-            order = np.argsort(-S, axis=1, kind="stable")[:, :spill]
-            m = order.shape[1]
+            V = vector_matrix(rb.column(1), "assign_clusters")
+            # per vector row, its top-``spill`` clusters by (rounded
+            # score desc, cluster asc) — the probe_clusters tie-break
+            top = local_topk(score(V, C_, "cosine", round_to), cids_,
+                             np.arange(len(V)), spill, True)
+            rep = top.column(0)
             dim = V.shape[1]
-            rep = np.repeat(np.arange(len(V)), m)
             vec_out = pa.ListArray.from_arrays(
                 pa.array(np.arange(len(rep) + 1, dtype=np.int32) * dim),
-                pa.array(V[rep].ravel()))
+                pa.array(V[rep.to_numpy()].ravel()))
             yield pa.RecordBatch.from_arrays(
-                [rb.column(0).take(pa.array(rep)).cast(pa.int64()),
-                 vec_out, pa.array(cids_[order].ravel())],
+                [rb.column(0).take(rep).cast(pa.int64()), vec_out,
+                 top.column(1)],
                 names=[id_col, vec_col, cluster_col])
 
     return corpus.select(id_col, vec_col).mapInArrow(
-        op, schema=f"{id_col} long, {vec_col} array<double>, "
-                   f"{cluster_col} int")
+        kernel, schema=f"{id_col} long, {vec_col} array<double>, "
+                       f"{cluster_col} int")
 
 
 def kmeans_silhouette_sweep(corpus: DataFrame, k_values=range(2, 8),

@@ -20,10 +20,20 @@ SQL oracle) and recall is measured against the exact scan by
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from python_vector_db___ai_spark.operators._guards import collect_small
+from python_vector_db___ai_spark.operators._kernels import (
+    descending,
+    id_array,
+    local_topk,
+    small_side,
+    vector_matrix,
+)
+from python_vector_db___ai_spark.operators._ranking import topk_window
+from python_vector_db___ai_spark.operators.ivf import _score_pairs_blas
 
 
 def _infer_dim(df: DataFrame, vec_col: str, dim: int | None) -> int:
@@ -41,16 +51,12 @@ def _infer_dim(df: DataFrame, vec_col: str, dim: int | None) -> int:
 def _pack_bits(bits):
     """(rows, n_bits) bool -> (rows, n_bits//64) int64, little-endian
     bit order inside each word."""
-    import numpy as np
-
     packed = np.packbits(bits, axis=1, bitorder="little")
     return packed.view("<i8")
 
 
 def _unpack_bits(words, n_bits: int):
     """(rows, n_words) int64 -> (rows, n_bits) uint8 in {0,1}."""
-    import numpy as np
-
     u8 = np.ascontiguousarray(words, dtype="<i8").view(np.uint8)
     return np.unpackbits(u8, axis=1, bitorder="little")[:, :n_bits]
 
@@ -67,33 +73,29 @@ def sketch_build(corpus: DataFrame, n_bits: int = 256, seed: int = 42,
     as parquet columns next to the vectors) and reuse across query
     batches; the sketch pass is the index build.
     """
-    import numpy as np
-
     if n_bits % 64:
         raise ValueError("n_bits must be a multiple of 64")
     n_words = n_bits // 64
     rng = np.random.default_rng(seed)
     d = _infer_dim(corpus, vec_col, dim)
     H = rng.standard_normal((n_bits, d))
-    sc = corpus.sparkSession.sparkContext
-    bc = sc.broadcast(H)
+    bc = corpus.sparkSession.sparkContext.broadcast(H)
 
-    def op(batches):
+    def kernel(batches):
         Hm = bc.value
-        for pdf in batches:
-            if pdf.empty:
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            V = vector_matrix(rb.column(vec_col), "sketch_build")
             words = _pack_bits(V @ Hm.T > 0)
-            out = pdf.copy()
-            for w in range(n_words):
-                out[f"_sk{w}"] = words[:, w]
-            yield out
+            yield pa.RecordBatch.from_arrays(
+                rb.columns + [pa.array(words[:, w]) for w in range(n_words)],
+                names=rb.schema.names + [f"_sk{w}" for w in range(n_words)])
 
     fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                        for f in corpus.schema.fields)
     sk_fields = ", ".join(f"_sk{w} long" for w in range(n_words))
-    sk = corpus.mapInPandas(op, schema=f"{fields}, {sk_fields}")
+    sk = corpus.mapInArrow(kernel, schema=f"{fields}, {sk_fields}")
     return H, sk
 
 
@@ -123,74 +125,48 @@ def sketch_knn(queries: DataFrame, corpus: DataFrame, k: int = 10,
     deterministic.  ``prebuilt``: ``(H, corpus_with_sketch)`` from
     :func:`sketch_build`.
     """
-    import numpy as np
-    import pandas as pd
-
-    from python_vector_db___ai_spark.operators.ivf import _score_pairs_blas
-    from pyspark.sql import Window
-
     if prebuilt is not None:
         H, sk = prebuilt
     else:
         H, sk = sketch_build(corpus, n_bits, seed, corpus_id, vec_col,
                              dim=dim)
 
-    qrows = collect_small(
-        queries.select(query_id, query_vec), "sketch_knn queries",
-        hint="Batch the query set.")
-    if not qrows:
+    q_ids, Q = small_side(queries, query_id, query_vec,
+                          "sketch_knn queries", hint="Batch the query set.")
+    if not len(q_ids):
         return corpus.sparkSession.createDataFrame(
             [], f"{query_id} long, {corpus_id} long, score double, "
                 "rank long")
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.array([r[1] for r in qrows], dtype=np.float64)
     qbits = (Q @ H.T > 0).astype(np.float32)      # (nq, n_bits) in {0,1}
     qsum = qbits.sum(axis=1)
-    sc = corpus.sparkSession.sparkContext
-    bc = sc.broadcast((q_ids, qbits, qsum))
-
+    bc = corpus.sparkSession.sparkContext.broadcast((q_ids, qbits, qsum))
     n_words = n_bits // 64
 
-    def local_toplmap(batches):
+    def local_topl(batches):
         q_ids_, qb_, qs_ = bc.value
-        for pdf in batches:
-            if pdf.empty:
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            words = np.stack(
-                [pdf[f"_sk{w}"].to_numpy(dtype=np.int64)
-                 for w in range(n_words)], axis=1)
+            words = np.stack([id_array(rb.column(1 + w))
+                              for w in range(n_words)], axis=1)
             cb = _unpack_bits(words, n_bits).astype(np.float32)
-            c_ids = pdf[corpus_id].to_numpy(dtype=np.int64)
             # hamming = |q| + |c| - 2 q·c  (0/1 vectors)
             ham = (qs_[:, None] + cb.sum(axis=1)[None, :]
                    - 2.0 * (qb_ @ cb.T)).astype(np.int64)
-            kk = min(L, len(c_ids))
-            out = []
-            for qi in range(len(q_ids_)):
-                order = np.lexsort((c_ids, ham[qi]))[:kk]
-                out.append(pd.DataFrame({
-                    query_id: np.full(len(order), q_ids_[qi]),
-                    corpus_id: c_ids[order],
-                    "_ham": ham[qi][order]}))
-            yield pd.concat(out, ignore_index=True)
+            yield local_topk(ham, id_array(rb.column(0)), q_ids_, L, False,
+                             (query_id, corpus_id, "_ham"))
 
     local = sk.select(corpus_id,
-                      *[f"_sk{w}" for w in range(n_words)]).mapInPandas(
-        local_toplmap, schema=f"{query_id} long, {corpus_id} long, _ham long")
-    wham = Window.partitionBy(query_id).orderBy(
-        F.col("_ham").asc(), F.col(corpus_id).asc())
-    cand = (local.withColumn("_hr", F.row_number().over(wham))
-            .filter(F.col("_hr") <= L)
-            .select(query_id, corpus_id))
+                      *[f"_sk{w}" for w in range(n_words)]).mapInArrow(
+        local_topl, schema=f"{query_id} long, {corpus_id} long, _ham long")
+    cand = topk_window(local, L, query_id, corpus_id, score_col="_ham",
+                       desc=False).select(query_id, corpus_id)
 
     pairs = (corpus.select(F.col(corpus_id), F.col(vec_col).alias("_cvec"))
              .join(F.broadcast(cand), corpus_id)
              .join(F.broadcast(queries.select(query_id, query_vec)),
                    query_id))
-    desc = metric in ("cosine", "inner_product", "euclidean_similarity")
-    scored = _score_pairs_blas(
-        pairs.select(query_id, corpus_id, query_vec, "_cvec"),
-        k, metric, query_id, query_vec, corpus_id, "_cvec", round_to, desc)
-    from python_vector_db___ai_spark.operators._ranking import topk_window
-
-    return topk_window(scored, k, query_id, corpus_id, desc=desc)
+    scored = _score_pairs_blas(pairs, metric, query_id, query_vec,
+                               corpus_id, "_cvec", round_to)
+    return topk_window(scored, k, query_id, corpus_id,
+                       desc=descending(metric))

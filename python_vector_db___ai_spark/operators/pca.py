@@ -85,7 +85,7 @@ def _cov_numpy(df: DataFrame, vec_col: str = "embedding"):
 
     rows = collect_small(_cov_partials(df, vec_col), "covariance partials",
                          hint="One row per partition expected.")
-    rows = sorted(rows, key=lambda r: r["pid"])
+    rows = sorted(rows.to_pylist(), key=lambda r: r["pid"])
     n = sum(r["n"] for r in rows)
     if n < 2:
         raise ValueError("covariance needs at least 2 rows")

@@ -30,16 +30,27 @@ top candidates with full vectors when the table keeps them.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from python_vector_db___ai_spark.operators._guards import collect_small
-from python_vector_db___ai_spark.operators.ivf import _lloyd
+from python_vector_db___ai_spark.operators._kernels import (
+    descending,
+    id_array,
+    local_topk,
+    small_side,
+    vector_matrix,
+)
+from python_vector_db___ai_spark.operators._ranking import topk_window
+from python_vector_db___ai_spark.operators.ivf import (
+    _lloyd,
+    _probe_rows_driver,
+    _score_pairs_blas,
+)
 
 
 def _maybe_normalize(V, normalize: bool):
-    import numpy as np
-
     if not normalize:
         return V
     n = np.linalg.norm(V, axis=1, keepdims=True)
@@ -59,13 +70,9 @@ def pq_train(corpus: DataFrame, m: int = 8, n_codes: int = 256,
     equal cosine ordering — WITHOUT a Spark-side normalization pass,
     which would be a per-row interpreted higher-order-function walk
     over the whole corpus."""
-    import numpy as np
-
-    rows = collect_small(
-        corpus.select(id_col, vec_col).orderBy(id_col).limit(sample_rows),
-        "pq_train sample")
-    X = _maybe_normalize(
-        np.array([r[vec_col] for r in rows], dtype=np.float64), normalize)
+    _, X = small_side(corpus.orderBy(id_col).limit(sample_rows), id_col,
+                      vec_col, "pq_train sample")
+    X = _maybe_normalize(X, normalize)
     dim = X.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
@@ -79,8 +86,6 @@ def pq_train(corpus: DataFrame, m: int = 8, n_codes: int = 256,
 
 def _unpack_codes(packed, m: int):
     """(rows,) int64 -> (rows, m) int64 byte codes."""
-    import numpy as np
-
     return (packed[:, None] >> (8 * np.arange(m))[None, :]) & 0xFF
 
 
@@ -88,8 +93,6 @@ def _adc_lut(books, Q):
     """LUT[q, j, c] = squared L2 distance of query q's j-th subvector
     to codebook j's centroid c — the per-query ADC tables (shared by
     the flat and IVF-pruned search paths)."""
-    import numpy as np
-
     mm, n_codes, sub = books.shape
     lut = np.empty((len(Q), mm, n_codes))
     for j in range(mm):
@@ -97,6 +100,16 @@ def _adc_lut(books, Q):
         lut[:, j, :] = (((Xj[:, None, :] - books[j][None, :, :]) ** 2)
                         .sum(-1))
     return lut
+
+
+def _adc_dist(lut, qrows, packed, round_to: int):
+    """ADC L2 distances ``(len(qrows), n)``: LUT row ``qrows[i]`` against
+    each packed code, ``dist[i, r] = sqrt(sum_j lut[qrows[i], j,
+    code[r, j]])`` rounded — numpy gathers, no vector touched."""
+    codes = _unpack_codes(packed, lut.shape[1])
+    sub = np.arange(lut.shape[1])[None, :]
+    d = np.stack([lut[q, sub, codes].sum(1) for q in qrows])
+    return np.round(np.sqrt(np.clip(d, 0.0, None)), round_to)
 
 
 def pq_encode(corpus: DataFrame, codebooks, vec_col: str = "embedding",
@@ -108,22 +121,19 @@ def pq_encode(corpus: DataFrame, codebooks, vec_col: str = "embedding",
     per-row list materialization (requires ``m <= 8`` and
     ``n_codes <= 256``, i.e. codes fit 8 bytes — the standard PQ8
     configuration)."""
-    import numpy as np
-
     m, _, books, normalize = codebooks
     if m > 8 or books.shape[1] > 256:
         raise ValueError("packed codes need m <= 8 and n_codes <= 256")
-    sc = corpus.sparkSession.sparkContext
-    bc = sc.broadcast((books, normalize))
+    bc = corpus.sparkSession.sparkContext.broadcast((books, normalize))
 
-    def op(batches):
+    def kernel(batches):
         B, norm_ = bc.value
         mm, n_codes, sub = B.shape
-        for pdf in batches:
-            if pdf.empty:
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            V = _maybe_normalize(
-                np.array(pdf[vec_col].tolist(), dtype=np.float64), norm_)
+            V = _maybe_normalize(vector_matrix(rb.column(1), "pq_encode"),
+                                 norm_)
             packed = np.zeros(len(V), dtype=np.int64)
             for j in range(mm):
                 Xj = V[:, j * sub:(j + 1) * sub]
@@ -131,12 +141,12 @@ def pq_encode(corpus: DataFrame, codebooks, vec_col: str = "embedding",
                 d = (-2.0 * Xj @ B[j].T
                      + (B[j] ** 2).sum(1)[None, :])
                 packed |= d.argmin(1).astype(np.int64) << (8 * j)
-            out = pdf[[id_col]].copy()
-            out[code_col] = packed
-            yield out
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0).cast(pa.int64()), pa.array(packed)],
+                names=[id_col, code_col])
 
-    return corpus.select(id_col, vec_col).mapInPandas(
-        op, schema=f"{id_col} long, {code_col} long")
+    return corpus.select(id_col, vec_col).mapInArrow(
+        kernel, schema=f"{id_col} long, {code_col} long")
 
 
 def pq_reconstruction_error(corpus: DataFrame, codebooks,
@@ -144,32 +154,31 @@ def pq_reconstruction_error(corpus: DataFrame, codebooks,
                             id_col: str = "vec_id") -> DataFrame:
     """Per-row L2 reconstruction error of the PQ approximation —
     ``(id_col, l2_error)`` — the audit that justifies a codebook size."""
-    import numpy as np
-    import pandas as pd
-
     m, _, books, normalize = codebooks
-    sc = corpus.sparkSession.sparkContext
-    bc = sc.broadcast((books, normalize))
+    bc = corpus.sparkSession.sparkContext.broadcast((books, normalize))
 
-    def op(batches):
+    def kernel(batches):
         B, norm_ = bc.value
         mm, n_codes, sub = B.shape
-        for pdf in batches:
-            if pdf.empty:
+        for rb in batches:
+            if not rb.num_rows:
                 continue
             V = _maybe_normalize(
-                np.array(pdf[vec_col].tolist(), dtype=np.float64), norm_)
+                vector_matrix(rb.column(1), "pq_reconstruction_error"),
+                norm_)
             err2 = np.zeros(len(V))
             for j in range(mm):
                 Xj = V[:, j * sub:(j + 1) * sub]
                 d = (-2.0 * Xj @ B[j].T + (B[j] ** 2).sum(1)[None, :])
                 code = d.argmin(1)
                 err2 += ((Xj - B[j][code]) ** 2).sum(1)
-            yield pd.DataFrame({id_col: pdf[id_col],
-                                "l2_error": np.round(np.sqrt(err2), 6)})
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0).cast(pa.int64()),
+                 pa.array(np.round(np.sqrt(err2), 6))],
+                names=[id_col, "l2_error"])
 
-    return corpus.select(id_col, vec_col).mapInPandas(
-        op, schema=f"{id_col} long, l2_error double")
+    return corpus.select(id_col, vec_col).mapInArrow(
+        kernel, schema=f"{id_col} long, l2_error double")
 
 
 def pq_adc_search(queries: DataFrame, encoded: DataFrame, codebooks,
@@ -186,50 +195,29 @@ def pq_adc_search(queries: DataFrame, encoded: DataFrame, codebooks,
     small window merges.  Returns
     ``(query_id, corpus_id, adc_dist, rank)``.
     """
-    import numpy as np
-    import pandas as pd
-
     m, _, books, normalize = codebooks
-    qrows = collect_small(
-        queries.select(query_id, query_vec), "pq_adc_search queries",
+    q_ids, Q = small_side(
+        queries, query_id, query_vec, "pq_adc_search queries",
         hint="Batch the query set; the LUTs are per-query.")
-    if not qrows:
+    if not len(q_ids):
         return encoded.sparkSession.createDataFrame(
             [], f"{query_id} long, {corpus_id} long, adc_dist double, "
                 "rank long")
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = _maybe_normalize(
-        np.array([r[1] for r in qrows], dtype=np.float64), normalize)
-    mm = books.shape[0]
-    lut = _adc_lut(books, Q)
-    sc = encoded.sparkSession.sparkContext
-    bc = sc.broadcast((q_ids, lut))
+    lut = _adc_lut(books, _maybe_normalize(Q, normalize))
+    bc = encoded.sparkSession.sparkContext.broadcast((q_ids, lut))
 
-    def op(batches):
+    def kernel(batches):
         q_ids_, lut_ = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = _unpack_codes(
-                pdf[code_col].to_numpy(dtype=np.int64), mm)
-            c_ids = pdf[corpus_id].to_numpy(dtype=np.int64)
-            kk = min(k, len(c_ids))
-            out = []
-            for qi in range(len(q_ids_)):
-                # gather: dist[row] = sum_j lut[qi, j, codes[row, j]]
-                d = lut_[qi, np.arange(mm)[None, :], codes].sum(1)
-                d = np.round(np.sqrt(np.clip(d, 0.0, None)), round_to)
-                order = np.lexsort((c_ids, d))[:kk]
-                out.append(pd.DataFrame({
-                    query_id: np.full(len(order), q_ids_[qi]),
-                    corpus_id: c_ids[order],
-                    "adc_dist": d[order]}))
-            yield pd.concat(out, ignore_index=True)
+        for rb in batches:
+            if rb.num_rows:
+                yield local_topk(
+                    _adc_dist(lut_, np.arange(len(q_ids_)),
+                              id_array(rb.column(1)), round_to),
+                    id_array(rb.column(0)), q_ids_, k, False,
+                    (query_id, corpus_id, "adc_dist"))
 
-    local = encoded.select(corpus_id, code_col).mapInPandas(
-        op, schema=f"{query_id} long, {corpus_id} long, adc_dist double")
-    from python_vector_db___ai_spark.operators._ranking import topk_window
-
+    local = encoded.select(corpus_id, code_col).mapInArrow(
+        kernel, schema=f"{query_id} long, {corpus_id} long, adc_dist double")
     return topk_window(local, k, query_id, corpus_id,
                        score_col="adc_dist", desc=False)
 
@@ -254,91 +242,55 @@ def ivfpq_search(queries: DataFrame, corpus: DataFrame,
     ``nprobe/nlist × n × 8 bytes`` of codes + ``k × overfetch``
     vectors — at 100 TB, the only full-width reads are the re-rank's.
     """
-    import numpy as np
-    import pandas as pd
-
-    from python_vector_db___ai_spark.operators.ivf import (
-        _probe_rows_driver,
-        _score_pairs_blas,
-    )
-
     m, _, books, normalize = codebooks
-    probe_rows = _probe_rows_driver(queries, centroids, nprobe,
-                                    query_id, query_vec, cluster_col,
-                                    round_to)
-    if not probe_rows:
+    q_ids, Q, qi, labs = _probe_rows_driver(queries, centroids, nprobe,
+                                            query_id, query_vec,
+                                            cluster_col, round_to)
+    if not len(qi):
         return corpus.sparkSession.createDataFrame(
             [], f"{query_id} long, {corpus_id} long, score double, "
                 "rank long")
-    # per-cluster -> which queries probe it
-    probing: dict = {}
-    qvecs: dict = {}
-    for r in probe_rows:
-        probing.setdefault(r[cluster_col], []).append(r[query_id])
-        qvecs[r[query_id]] = r[query_vec]
-    q_ids = np.array(sorted(qvecs), dtype=np.int64)
-    qpos = {int(q): i for i, q in enumerate(q_ids)}
-    Q = _maybe_normalize(
-        np.array([qvecs[int(q)] for q in q_ids], dtype=np.float64),
-        normalize)
-    mm = books.shape[0]
-    lut = _adc_lut(books, Q)
+    # per cluster -> the rows of Q (and of the LUT) that probe it
+    probing = {lab: qi[labs == lab] for lab in np.unique(labs)}
+    lut = _adc_lut(books, _maybe_normalize(Q, normalize))
     kk = k * overfetch
-    labels = sorted(probing)
-    sc = corpus.sparkSession.sparkContext
-    bc = sc.broadcast((probing, qpos, lut))
+    bc = corpus.sparkSession.sparkContext.broadcast((probing, q_ids, lut))
 
     def kernel(batches):
-        probing_, qpos_, lut_ = bc.value
-        for pdf in batches:
-            if pdf.empty:
+        probing_, q_ids_, lut_ = bc.value
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            out = []
-            for lab, sub_pdf in pdf.groupby(cluster_col, sort=False):
+            blabs = rb.column(0).to_numpy()
+            c_ids = id_array(rb.column(1))
+            packed = id_array(rb.column(2))
+            for lab in np.unique(blabs):
                 qs = probing_.get(lab)
-                if not qs:
+                if qs is None:
                     continue
-                codes = _unpack_codes(
-                    sub_pdf[code_col].to_numpy(dtype=np.int64), mm)
-                c_ids = sub_pdf[corpus_id].to_numpy(dtype=np.int64)
-                take = min(kk, len(c_ids))
-                for q in qs:
-                    d = lut_[qpos_[q], np.arange(mm)[None, :],
-                             codes].sum(1)
-                    d = np.round(np.sqrt(np.clip(d, 0.0, None)),
-                                 round_to)
-                    order = np.lexsort((c_ids, d))[:take]
-                    out.append(pd.DataFrame({
-                        query_id: np.full(len(order), q),
-                        corpus_id: c_ids[order],
-                        "adc_dist": d[order]}))
-            if out:
-                yield pd.concat(out, ignore_index=True)
+                rows = blabs == lab
+                yield local_topk(
+                    _adc_dist(lut_, qs, packed[rows], round_to),
+                    c_ids[rows], q_ids_[qs], kk, False,
+                    (query_id, corpus_id, "adc_dist"))
 
     pruned = (encoded_assigned
-              .filter(F.col(cluster_col).isin(labels))
+              .filter(F.col(cluster_col).isin(sorted(probing)))
               .select(cluster_col, corpus_id, code_col))
-    local = pruned.mapInPandas(
+    local = pruned.mapInArrow(
         kernel, schema=f"{query_id} long, {corpus_id} long, adc_dist double")
-    wc = Window.partitionBy(query_id).orderBy(
-        F.col("adc_dist").asc(), F.col(corpus_id).asc())
-    cand = (local
-            # spill assignment can surface a vector from two probed
-            # clusters with the same code distance — key-dedup first
-            .dropDuplicates([query_id, corpus_id])
-            .withColumn("_r", F.row_number().over(wc))
-            .filter(F.col("_r") <= kk)
-            .select(query_id, corpus_id))
+    # spill assignment can surface a vector from two probed clusters
+    # with the same code distance — key-dedup first
+    cand = topk_window(local.dropDuplicates([query_id, corpus_id]), kk,
+                       query_id, corpus_id, score_col="adc_dist",
+                       desc=False).select(query_id, corpus_id)
     pairs = (corpus.select(F.col(corpus_id), F.col(vec_col).alias("_cvec"))
              .join(F.broadcast(cand), corpus_id)
              .join(F.broadcast(queries.select(query_id, query_vec)),
                    query_id))
     scored = _score_pairs_blas(
-        pairs.select(query_id, corpus_id, query_vec, "_cvec"),
-        k, "cosine" if normalize else "l2", query_id, query_vec,
-        corpus_id, "_cvec", round_to, bool(normalize))
-    from python_vector_db___ai_spark.operators._ranking import topk_window
-
+        pairs, "cosine" if normalize else "l2", query_id, query_vec,
+        corpus_id, "_cvec", round_to)
     return topk_window(scored, k, query_id, corpus_id,
                        desc=bool(normalize))
 
@@ -355,8 +307,6 @@ def pq_search_rerank(queries: DataFrame, corpus: DataFrame, encoded,
     full vectors are read and exactly re-ranked (the FAISS
     ADC-then-refine pattern).  Full-vector touches per query =
     ``k × overfetch``, independent of corpus size."""
-    from python_vector_db___ai_spark.operators.ivf import _score_pairs_blas
-
     cand = (pq_adc_search(queries, encoded, codebooks, k=k * overfetch,
                           query_id=query_id, query_vec=query_vec,
                           corpus_id=corpus_id, round_to=round_to)
@@ -365,10 +315,7 @@ def pq_search_rerank(queries: DataFrame, corpus: DataFrame, encoded,
              .join(F.broadcast(cand), corpus_id)
              .join(F.broadcast(queries.select(query_id, query_vec)),
                    query_id))
-    desc = metric in ("cosine", "inner_product", "euclidean_similarity")
-    scored = _score_pairs_blas(
-        pairs.select(query_id, corpus_id, query_vec, "_cvec"),
-        k, metric, query_id, query_vec, corpus_id, "_cvec", round_to, desc)
-    from python_vector_db___ai_spark.operators._ranking import topk_window
-
-    return topk_window(scored, k, query_id, corpus_id, desc=desc)
+    scored = _score_pairs_blas(pairs, metric, query_id, query_vec,
+                               corpus_id, "_cvec", round_to)
+    return topk_window(scored, k, query_id, corpus_id,
+                       desc=descending(metric))

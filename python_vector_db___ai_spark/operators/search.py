@@ -14,20 +14,35 @@ distance → ORDER BY LIMIT k):
 * per-query top-k = ``row_number() OVER (PARTITION BY query ORDER BY
   score)`` with a deterministic ``id`` tie-break — at scale AQE handles
   the (tiny: n_queries x k candidates) final shuffle.
+* the BLAS paths (:func:`knn_join_blas`, :func:`knn_join_blas_multi`,
+  :func:`pairwise_metrics_blas`) are ``mapInArrow`` kernels: each
+  Arrow batch is read, scored and locally cut to top-k through
+  ``operators/_kernels.py``, and the final merge is the shared
+  ``_ranking.topk_window``.
 """
 
 from __future__ import annotations
 
 from typing import Mapping, Sequence
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from python_vector_db___ai_spark.functions.vector import (
-    DESCENDING_METRICS,
     METRICS,
     cosine_similarity,
 )
+from python_vector_db___ai_spark.operators._kernels import (
+    descending,
+    id_array,
+    local_topk,
+    score,
+    small_side,
+    vector_matrix,
+)
+from python_vector_db___ai_spark.operators._ranking import topk_window
 
 
 def apply_metadata_filter(df: DataFrame, metadata_filter: Mapping[str, str] | None,
@@ -48,9 +63,8 @@ def apply_metadata_filter(df: DataFrame, metadata_filter: Mapping[str, str] | No
 def score_column(metric: str, qcol: Column, ccol: Column) -> tuple[Column, bool]:
     """(score expression, descending?) for a named metric
     (day_9/models/schemas.py:6-13 DistanceMetric enum)."""
-    if metric not in METRICS:
-        raise ValueError(f"unknown metric {metric!r}; one of {sorted(METRICS)}")
-    return METRICS[metric](qcol, ccol), metric in DESCENDING_METRICS
+    desc = descending(metric)
+    return METRICS[metric](qcol, ccol), desc
 
 
 def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 10,
@@ -110,74 +124,31 @@ def knn_join_blas(queries: DataFrame, corpus: DataFrame, k: int = 10,
     ``n_queries * n_corpus`` total — at 100 TB that is the difference
     between a merge of sketches and a full re-shuffle of the corpus.
     """
-    import numpy as np
-    import pandas as pd
-
-    if metric not in ("cosine", "l2", "inner_product", "neg_inner_product"):
-        raise ValueError(f"metric {metric!r} not supported by the BLAS path")
-    desc = metric in DESCENDING_METRICS
-
-    from python_vector_db___ai_spark.operators._guards import collect_small
-
-    qrows = collect_small(
-        queries.select(query_id, query_vec), "knn_join_blas queries",
+    desc = descending(metric)
+    q_ids, Q = small_side(
+        queries, query_id, query_vec, "knn_join_blas queries",
         hint="Query batches are small by contract; for a large query "
              "side use knn_join (broadcast join) or batch the queries.")
-    if not qrows:
+    if not len(q_ids):
         return corpus.sparkSession.createDataFrame(
             [], f"{query_id} long, {corpus_id} long, score double, "
                 "rank long")
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.array([r[1] for r in qrows], dtype=np.float64)
-    qnorm = np.linalg.norm(Q, axis=1)
+    kk = k + (1 if exclude_self else 0)
 
-    def local_topk(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            C = np.array(pdf[corpus_vec].tolist(), dtype=np.float64)
-            c_ids = pdf[corpus_id].to_numpy(dtype=np.int64)
-            if metric == "cosine":
-                cnorm = np.linalg.norm(C, axis=1)
-                denom = np.outer(qnorm, cnorm)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    S = (Q @ C.T) / denom
-                S[(np.outer(qnorm <= 1e-12, np.ones(len(C), bool)))
-                  | (np.outer(np.ones(len(Q), bool), cnorm <= 1e-12))] = 0.0
-            elif metric == "l2":
-                sq = (np.sum(Q * Q, axis=1)[:, None]
-                      + np.sum(C * C, axis=1)[None, :] - 2.0 * (Q @ C.T))
-                S = np.sqrt(np.clip(sq, 0.0, None))
-            else:
-                S = Q @ C.T
-                if metric == "neg_inner_product":
-                    S = -S
-            S = np.round(S, round_to)
-            kk = min(k + (1 if exclude_self else 0), len(c_ids))
-            out_q, out_c, out_s = [], [], []
-            for qi in range(len(q_ids)):
-                keys = -S[qi] if desc else S[qi]
-                order = np.lexsort((c_ids, keys))[:kk]
-                out_q.append(np.full(len(order), q_ids[qi]))
-                out_c.append(c_ids[order])
-                out_s.append(S[qi][order])
-            yield pd.DataFrame({
-                query_id: np.concatenate(out_q),
-                corpus_id: np.concatenate(out_c),
-                "score": np.concatenate(out_s),
-            })
+    def kernel(batches):
+        for rb in batches:
+            if rb.num_rows:
+                yield local_topk(
+                    score(Q, vector_matrix(rb.column(1), "knn_join_blas"),
+                          metric, round_to),
+                    id_array(rb.column(0)), q_ids, kk, desc,
+                    (query_id, corpus_id, "score"))
 
-    local = corpus.select(corpus_id, corpus_vec).mapInPandas(
-        local_topk, schema=f"{query_id} long, {corpus_id} long, score double")
+    local = corpus.select(corpus_id, corpus_vec).mapInArrow(
+        kernel, schema=f"{query_id} long, {corpus_id} long, score double")
     if exclude_self:
         local = local.filter(F.col(query_id) != F.col(corpus_id))
-    order = [F.col("score").desc() if desc else F.col("score").asc(),
-             F.col(corpus_id).asc()]
-    w = Window.partitionBy(query_id).orderBy(*order)
-    return (local
-            .withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .select(query_id, corpus_id, "score", "rank"))
+    return topk_window(local, k, query_id, corpus_id, desc=desc)
 
 
 def knn_join_blas_multi(queries: DataFrame, corpus: DataFrame, k: int = 10,
@@ -190,87 +161,48 @@ def knn_join_blas_multi(queries: DataFrame, corpus: DataFrame, k: int = 10,
                         round_to: int = 6) -> DataFrame:
     """Batch kNN under SEVERAL metrics from ONE corpus pass.
 
-    cosine, L2 and inner-product all derive from the same ``Q @ C.T``
-    matrix (cosine divides by norms, L2 completes the square), so one
-    Arrow scan + one matmul per batch serves every metric — versus one
-    full corpus pass per metric with separate :func:`knn_join_blas`
-    calls.  Per-metric results are identical to the single-metric path
-    (same rounding, same id tie-break); the final merge is one window
-    over ``(metric, query)`` using a direction-normalized sort key.
+    Each Arrow batch of the corpus is read once and scored under every
+    metric — versus one full corpus pass per metric with separate
+    :func:`knn_join_blas` calls.  Per-metric results are identical to
+    the single-metric path (same rounding, same id tie-break); the
+    final merge is one window over ``(metric, query)`` ordered by a
+    direction-normalized key (the score, negated for descending
+    metrics).
 
     ``metric_labels``: (metric, output label) pairs; returns
     ``(metric, query_id, corpus_id, score, rank)`` with ``metric`` set
     to the label.
     """
-    import numpy as np
-    import pandas as pd
-
-    from python_vector_db___ai_spark.operators._guards import collect_small
-
-    for m, _ in metric_labels:
-        if m not in ("cosine", "l2", "inner_product", "neg_inner_product"):
-            raise ValueError(f"metric {m!r} not supported by the BLAS path")
-
-    qrows = collect_small(
-        queries.select(query_id, query_vec), "knn_join_blas_multi queries",
+    desc_labels = [lab for m, lab in metric_labels if descending(m)]
+    q_ids, Q = small_side(
+        queries, query_id, query_vec, "knn_join_blas_multi queries",
         hint="Query batches are small by contract; batch the queries.")
-    if not qrows:
+    if not len(q_ids):
         return corpus.sparkSession.createDataFrame(
             [], f"metric string, {query_id} long, {corpus_id} long, "
                 "score double, rank long")
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.array([r[1] for r in qrows], dtype=np.float64)
-    qnorm = np.linalg.norm(Q, axis=1)
-    qsq = np.einsum("ij,ij->i", Q, Q)
 
-    def local_topk(batches):
-        for pdf in batches:
-            if pdf.empty:
+    def kernel(batches):
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            C = np.array(pdf[corpus_vec].tolist(), dtype=np.float64)
-            c_ids = pdf[corpus_id].to_numpy(dtype=np.int64)
-            dot = Q @ C.T                      # the one matmul
-            cnorm = np.linalg.norm(C, axis=1)
-            csq = np.einsum("ij,ij->i", C, C)
-            kk = min(k, len(c_ids))
-            frames = []
+            C = vector_matrix(rb.column(1), "knn_join_blas_multi")
+            c_ids = id_array(rb.column(0))
             for metric, label in metric_labels:
-                if metric == "cosine":
-                    denom = np.outer(qnorm, cnorm)
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        S = dot / denom
-                    S[(np.outer(qnorm <= 1e-12, np.ones(len(C), bool)))
-                      | (np.outer(np.ones(len(Q), bool),
-                                  cnorm <= 1e-12))] = 0.0
-                    desc = True
-                elif metric == "l2":
-                    S = np.sqrt(np.clip(
-                        qsq[:, None] + csq[None, :] - 2.0 * dot, 0.0, None))
-                    desc = False
-                elif metric == "neg_inner_product":
-                    S = -dot
-                    desc = False
-                else:
-                    S = dot
-                    desc = True
-                S = np.round(S, round_to)
-                for qi in range(len(q_ids)):
-                    keys = -S[qi] if desc else S[qi]
-                    order = np.lexsort((c_ids, keys))[:kk]
-                    frames.append(pd.DataFrame({
-                        "metric": label,
-                        query_id: np.full(len(order), q_ids[qi]),
-                        corpus_id: c_ids[order],
-                        "score": S[qi][order],
-                        "_okey": keys[order]}))
-            yield pd.concat(frames, ignore_index=True)
+                top = local_topk(score(Q, C, metric, round_to), c_ids,
+                                 q_ids, k, descending(metric),
+                                 (query_id, corpus_id, "score"))
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array([label] * top.num_rows, pa.string()),
+                     *top.columns], names=["metric", *top.schema.names])
 
-    local = corpus.select(corpus_id, corpus_vec).mapInPandas(
-        local_topk,
-        schema=f"metric string, {query_id} long, {corpus_id} long, "
-               "score double, _okey double")
+    local = corpus.select(corpus_id, corpus_vec).mapInArrow(
+        kernel, schema=f"metric string, {query_id} long, {corpus_id} long, "
+                       "score double")
+    okey = F.when(F.col("metric").isin(desc_labels), -F.col("score")) \
+        .otherwise(F.col("score"))
     w = Window.partitionBy("metric", query_id).orderBy(
-        F.col("_okey").asc(), F.col(corpus_id).asc())
+        okey.asc(), F.col(corpus_id).asc())
     return (local
             .withColumn("rank", F.row_number().over(w).cast("long"))
             .filter(F.col("rank") <= k)
@@ -281,54 +213,34 @@ def pairwise_metrics_blas(vectors: DataFrame, id_col: str = "id",
                           vec_col: str = "embedding",
                           round_to: int = 6) -> DataFrame:
     """All (i < j) pairs with BOTH rounded cosine and L2 distance from
-    one broadcast matmul per partition — the vectorized form of the
+    one broadcast matrix per partition — the vectorized form of the
     upper-triangle θ-join (small-by-contract corpora; guarded).
     Returns ``(i, j, cos_score, dist)``."""
-    import numpy as np
-    import pandas as pd
-
-    from python_vector_db___ai_spark.operators._guards import collect_small
-
-    rows = collect_small(
-        vectors.select(id_col, vec_col).orderBy(id_col),
-        "pairwise_metrics_blas corpus",
+    ids, V = small_side(
+        vectors, id_col, vec_col, "pairwise_metrics_blas corpus",
         hint="All-pairs output is quadratic; use the pruned/blocked "
              "near-dup operators for large corpora.")
-    if not rows:
+    if not len(ids):
         return vectors.sparkSession.createDataFrame(
             [], "i long, j long, cos_score double, dist double")
-    ids = np.array([r[id_col] for r in rows], dtype=np.int64)
-    V = np.array([r[vec_col] for r in rows], dtype=np.float64)
-    vn = np.linalg.norm(V, axis=1)
-    vsq = np.einsum("ij,ij->i", V, V)
-    sc = vectors.sparkSession.sparkContext
-    bc = sc.broadcast((ids, V, vn, vsq))
+    bc = vectors.sparkSession.sparkContext.broadcast((ids, V))
 
-    def op(batches):
-        ids_, V_, vn_, vsq_ = bc.value
-        for pdf in batches:
-            if pdf.empty:
+    def kernel(batches):
+        ids_, V_ = bc.value
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            A = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            a_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            an = np.linalg.norm(A, axis=1)
-            asq = np.einsum("ij,ij->i", A, A)
-            dot = A @ V_.T
-            with np.errstate(divide="ignore", invalid="ignore"):
-                S = dot / np.outer(an, vn_)
-            S[(np.outer(an <= 1e-12, np.ones(len(V_), bool)))
-              | (np.outer(np.ones(len(A), bool), vn_ <= 1e-12))] = 0.0
-            D = np.sqrt(np.clip(
-                asq[:, None] + vsq_[None, :] - 2.0 * dot, 0.0, None))
-            keep = ids_[None, :] > a_ids[:, None]          # i < j only
-            r, c = np.nonzero(keep)
-            yield pd.DataFrame({
-                "i": a_ids[r], "j": ids_[c],
-                "cos_score": np.round(S[r, c], round_to),
-                "dist": np.round(D[r, c], round_to)})
+            A = vector_matrix(rb.column(1), "pairwise_metrics_blas")
+            a_ids = id_array(rb.column(0))
+            r, c = np.nonzero(ids_[None, :] > a_ids[:, None])   # i < j
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(a_ids[r]), pa.array(ids_[c]),
+                 pa.array(score(A, V_, "cosine", round_to)[r, c]),
+                 pa.array(score(A, V_, "l2", round_to)[r, c])],
+                names=["i", "j", "cos_score", "dist"])
 
-    return vectors.select(id_col, vec_col).mapInPandas(
-        op, schema="i long, j long, cos_score double, dist double")
+    return vectors.select(id_col, vec_col).mapInArrow(
+        kernel, schema="i long, j long, cos_score double, dist double")
 
 
 def search(corpus: DataFrame, query_vec_lit, k: int = 10, metric: str = "cosine",

@@ -135,7 +135,7 @@ def knn_exact_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = _queries_df(spark, sf_dir)
-    # cosine / L2 / dot share one corpus pass and one matmul
+    # cosine / L2 / dot share one corpus pass (one Arrow read per batch)
     shared = knn_join_blas_multi(
         q, emb, k=K,
         metric_labels=(("cosine", "cosine"), ("l2", "l2"),
@@ -192,7 +192,7 @@ def topk_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     v = emb.filter(F.col("vec_id") < _PAIRS_N)
-    # ONE upper-triangle pass computes both metrics (one matmul per
+    # ONE upper-triangle pass computes both metrics (BLAS scores per
     # partition against the broadcast matrix — the θ-join's per-pair
     # interpreted expressions don't survive 20k pairs); cache() makes
     # the three consumers (cosine top-k, the global-max aggregate, the

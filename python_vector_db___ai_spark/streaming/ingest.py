@@ -210,7 +210,7 @@ def ingest_foreachbatch(spark: SparkSession, sf_dir: str,
         rows = collect_small(
             final, "ingest_foreachbatch final state",
             hint="Per-user state; at scale read the sink directly.")
-        return spark.createDataFrame(rows, _INGEST_STATE_SCHEMA)
+        return spark.createDataFrame(rows.to_pylist(), _INGEST_STATE_SCHEMA)
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(state_root, ignore_errors=True)

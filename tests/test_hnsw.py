@@ -121,3 +121,23 @@ def test_hnsw_exhaustive_beam_equals_exact(spark):
     got = sorted(map(tuple, hnsw_knn(
         q, emb, k=10, ef_search=60, n_partitions=1).collect()))
     assert got == exact
+
+
+def test_hnsw_knn_rounded_tie_keeps_lower_id(spark):
+    """Two corpus vectors whose cosines to the query round to the same
+    6-decimal score, the higher raw score on the higher id: with k=1
+    the contract (rounded score desc, id asc) keeps the LOWER id, so
+    the per-partition cut must happen after rounding."""
+    import math
+
+    def unit(cos):
+        return [cos, math.sqrt(1.0 - cos * cos)]
+
+    emb = spark.createDataFrame(
+        [(1, unit(0.5000001)), (2, unit(0.5000002))],
+        "vec_id long, embedding array<double>")
+    q = spark.createDataFrame([(0, [1.0, 0.0])],
+                              "query_id long, query_vec array<double>")
+    rows = hnsw_knn(q, emb, k=1, n_partitions=1).collect()
+    assert [(r.query_id, r.vec_id, r.score, r.rank) for r in rows] == \
+        [(0, 1, 0.5, 1)]

@@ -15,12 +15,13 @@ from python_vector_db___ai_spark.session import get_spark
 
 SHOWCASE = [
     ("knn_exact_batch",
-     "BLAS batch kNN: ONE corpus pass serves cosine/L2/dot (single "
-     "matmul per Arrow batch, per-metric local top-k) + the perturbed "
-     "parity branch; one small shuffle merges per (metric, query)"),
+     "BLAS batch kNN: ONE corpus pass serves cosine/L2/dot (each Arrow "
+     "batch read once by a MapInArrow kernel, per-metric local top-k) "
+     "+ the perturbed parity branch; one small shuffle merges per "
+     "(metric, query)"),
     ("ivf_search_cosine",
      "IVF: centroid aggregation, broadcast probes, cluster-pruned scan, "
-     "per-cluster matmul kernel"),
+     "per-cluster matmul MapInArrow kernel"),
     ("search_filtered",
      "filtered search lifecycle: metadata filter pushed to the scan, "
      "TakeOrderedAndProject for the top-k"),
