@@ -62,6 +62,21 @@ def test_local_topk_matches_full_lexsort(case):
     assert got == _reference_topk(S, c_ids, q_ids, k, desc)
 
 
+def test_local_topk_rows_with_exactly_k_survivors():
+    """Distinct scores per row, so no boundary tie survives and every
+    row keeps exactly k candidates; ids repeat across columns."""
+    rng = np.random.default_rng(3)
+    q_ids = np.arange(50, dtype=np.int64) + 7
+    c_ids = rng.integers(0, 5, 40)
+    S = np.array([rng.permutation(40) / 8.0 for _ in q_ids])
+    for k in (1, 3, 39):
+        for desc in (False, True):
+            rb = local_topk(S, c_ids, q_ids, k, desc)
+            assert rb.num_rows == len(q_ids) * k
+            got = list(zip(*(rb.column(i).to_pylist() for i in range(3))))
+            assert got == _reference_topk(S, c_ids, q_ids, k, desc)
+
+
 def test_score_matches_column_metrics(spark):
     rng = np.random.default_rng(7)
     A = rng.standard_normal((12, 5)).astype(np.float32)
