@@ -1058,7 +1058,7 @@ def dedup_scale_benchmark(spark, sf_dir: str, factors) -> list:
     from python_vector_db___ai_spark.operators.dedup import (
         dedup_components,
         minhash_lsh_pairs,
-        pop_cached_frames,
+        minhash_signature,
     )
     from python_vector_db___ai_spark.operators.quality import (
         crossdoc_dup_ngrams,
@@ -1119,86 +1119,55 @@ def dedup_scale_benchmark(spark, sf_dir: str, factors) -> list:
         # configuration.  With unigram shingles the copy-salting moves
         # Jaccard between a doc's copies only to ~0.67, which still
         # LSH-collides ~60% of each copy family — candidate pairs then
-        # grow quadratically in the factor and the verify join (not
-        # the banding) becomes the whole job.  3-shingles put salted
+        # grow quadratically in the factor and the verify (not the
+        # banding) becomes the whole job.  3-shingles put salted
         # copies at J~0.25 (collision ~2%) while true within-stratum
-        # near-dups stay at J~1; max_bucket drops any residual
-        # degenerate bucket before the self-join.
+        # near-dups stay at J~1; max_bucket skips any residual
+        # degenerate bucket.
         #
-        # Stage split (r7 directive #4): sign = map-only Arrow signing,
-        # band = bucket agg + capped self-join + distinct, verify = the
-        # UNPRUNED Jaccard verify join (prune_candidate_ids stays at
-        # its False default here), taken as the remainder.  NOTE: the
-        # stage_timings instrumentation adds count barriers and a
-        # candidate cache INSIDE the timed minhash_lsh_sec window, so
-        # this number is not directly comparable to r7's
-        # uninstrumented timing (r8 ADVICE) — the artifact carries
-        # minhash_timed_includes_profiling_barriers.
+        # Stage split: the timed total is one uninstrumented run of the
+        # operator (sign, band and the bucket-verify kernel in one
+        # plan).  After the reps, outside the timed window, one noop
+        # write of the signing pass gives minhash_sign_sec and one
+        # count of the verify_threshold=None frame gives the distinct
+        # candidate pairs entering the verify; minhash_verify_sec is
+        # the remainder (band + verify).
+        mh_cfg = dict(num_hashes=16, bands=4, shingle_n=3, max_bucket=1000)
         mh_holder: dict = {}
 
         def mh_pre():
             if "mh" in mh_holder:
                 mh_holder["mh"].unpersist(blocking=True)
-            # The operator's internal profile-mode caches (sigs,
-            # candidates) MUST go too: Spark's cache manager matches
-            # by canonicalized plan, so the next rep's rebuilt
-            # pipeline would silently read them (observed: rep 2/3
-            # "signed" 2M docs in 0.06 s and the committed median
-            # collapsed to verify-only cost, 6.3 s vs the honest
-            # ~33 s end-to-end).
-            for f in mh_holder.pop("internals", []):
-                f.unpersist(blocking=True)
 
         def mh_run():
-            stages: dict = {}
-            mh_t = (minhash_lsh_pairs(docs, num_hashes=16, bands=4,
-                                      shingle_n=3, verify_threshold=0.9,
-                                      max_bucket=1000,
-                                      stage_timings=stages)
+            mh_t = (minhash_lsh_pairs(docs, verify_threshold=0.9, **mh_cfg)
                     .select("i", "j").cache())
-            n_pairs = mh_t.count()
             mh_holder["mh"] = mh_t
-            mh_holder["internals"] = pop_cached_frames(stages)
-            return {
-                "minhash_pairs": n_pairs,
-                "minhash_timed_includes_profiling_barriers": True,
-                "minhash_sign_sec": stages.get("sign_sec"),
-                "minhash_band_sec": stages.get("band_sec"),
-                "minhash_candidates": stages.get("n_candidates"),
-                # explicit alias per r12 VERDICT #2: the pair count
-                # entering the verify join (deterministic for a given
-                # corpus+config — band-hash collisions, not timing)
-                "verify_candidates": stages.get("n_candidates"),
-            }
+            return {"minhash_pairs": mh_t.count()}
 
         mh = None
         if want("minhash"):
             sweep_timed(entry, "minhash_lsh", mh_run, reps, pre=mh_pre)
             mh = mh_holder["mh"]
-            # remainder vs the committed median (sweep_timed commits
-            # sign/band from the SAME median-timed rep as the total,
-            # so the subtraction decomposes one coherent run)
+            n_cand = minhash_lsh_pairs(docs, **mh_cfg).count()
+            # explicit alias per r12 VERDICT #2: the pair count entering
+            # the verify (deterministic for a given corpus+config —
+            # band-hash collisions, not timing)
+            entry["minhash_candidates"] = entry["verify_candidates"] = n_cand
+            t0 = time.perf_counter()
+            (minhash_signature(docs, 16, 3, hashed_shingles=True)
+             .write.format("noop").mode("overwrite").save())
+            entry["minhash_sign_sec"] = round(time.perf_counter() - t0, 3)
             entry["minhash_verify_sec"] = round(
-                entry["minhash_lsh_sec"]
-                - (entry.get("minhash_sign_sec") or 0.0)
-                - (entry.get("minhash_band_sec") or 0.0), 3)
+                entry["minhash_lsh_sec"] - entry["minhash_sign_sec"], 3)
             # normalized verify cost (r12 VERDICT #2): flat-or-falling
             # µs/candidate across notches re-proves that the verify
             # SLOPE is candidate-pair growth (quadratic in duplicate-
             # family size on the copy-salted corpus — a corpus
-            # property), not per-pair cost growth in the verify join.
-            if entry.get("verify_candidates"):
+            # property), not per-pair cost growth in the verify.
+            if n_cand:
                 entry["minhash_verify_us_per_cand"] = round(
-                    entry["minhash_verify_sec"]
-                    / entry["verify_candidates"] * 1e6, 3)
-            # Only the materialized pairs frame (mh) is consumed
-            # downstream (components, pagerank); free the final rep's
-            # corpus-sized internal caches NOW so the rest of the
-            # factor's blocks (crossdoc's 94M-gram hash agg in
-            # particular) don't run under cache-eviction memory
-            # pressure they never asked for.
-            for f in mh_holder.pop("internals", []):
-                f.unpersist(blocking=True)
+                    entry["minhash_verify_sec"] / n_cand * 1e6, 3)
 
         def components_run():
             hashed = docs.select("doc_id",
@@ -1418,7 +1387,6 @@ def dedup_scale_benchmark(spark, sf_dir: str, factors) -> list:
         from python_vector_db___ai_spark.operators.dedup import (
             decontaminate,
             minhash_incremental_flags,
-            minhash_signature,
             save_minhash_index,
         )
 

@@ -9,9 +9,11 @@ Five families, each chosen for a different scale/precision trade-off:
   shingles to kill join skew, the standard stop-shingle trick.
 * **MinHash + LSH banding** — per-doc signature of ``num_hashes``
   md5-derived min-hashes, grouped into bands; docs sharing any band
-  bucket become candidates (equi-join on the bucket key), then true
-  Jaccard verifies.  Candidate generation is O(n · bands) — the scale
-  path for near-dup at 100 TB.
+  bucket become candidates.  One exchange on the bucket key brings
+  each bucket's rows (signature and shingle set riding along) to one
+  Arrow kernel that emits and verifies its pairs in place — filter,
+  then verify inside each group; no self-join, no cache.  Shuffle
+  volume is O(n · bands) — the scale path for near-dup at 100 TB.
 * **SimHash** — 16/32-bit sign-of-sums fingerprint; near-dups =
   fingerprint pairs within ``max_hamming`` (bit_count(xor)).
 * **embedding cosine** — semantic near-dup over the embedding column;
@@ -24,11 +26,14 @@ row-local fingerprint passes (MinHash signatures, SimHash), which run
 as map-only Arrow batches with per-worker hash caches — bit-exact
 Python replicas of the same md5 primitives (``functions/pytext.py``),
 proven row-equal to their kept expression forms in
-``tests/test_dedup.py``.  No row-at-a-time UDFs anywhere.
+``tests/test_dedup.py`` — and the Arrow kernels that score pairs
+inside a bucket or cluster.  No row-at-a-time UDFs anywhere.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -155,8 +160,8 @@ def minhash_signature(df: DataFrame, num_hashes: int = 16,
     ``sh64`` — the DISTINCT full-64-bit ``stable_hash64`` values of
     the shingles (sorted) — the lean verify-set representation: at
     ~100 shingles/doc the column is ~800 B of longs instead of ~2 KB
-    of strings, which shrinks the signature cache AND (the real win)
-    the per-pair shuffle volume of the Jaccard verify join ~2.5×.
+    of strings, which shrinks the shuffle volume of
+    :func:`minhash_lsh_pairs`' bucket exchange ~2.5×.
     Jaccard over the hashed sets equals Jaccard over the strings
     absent 64-bit collisions (same documented trade as
     ``quality.crossdoc_dup_ngrams``; the md5-derived ``stable_hash64``
@@ -343,9 +348,11 @@ def minhash_signature_expr(df: DataFrame, num_hashes: int = 16,
     return hashed.select("_id", "shingles", sig.alias("sig"))
 
 
-def _band_frame(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """LSH banding of a signature frame: ``(_id, band, bucket)`` where
-    the bucket keys the band's hash slice.
+def _band_frame(sigs: DataFrame, num_hashes: int, bands: int,
+                carry: tuple[str, ...] = ()) -> DataFrame:
+    """LSH banding of a signature frame: ``(_id, *carry, band,
+    bucket)`` where the bucket keys the band's hash slice and the
+    ``carry`` columns ride along on every band row.
 
     The bucket is only ever compared for EQUALITY (same band, same
     bucket → candidate pair), so any injective-enough function of the
@@ -364,9 +371,9 @@ def _band_frame(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
             F.lit(b).alias("band"),
             F.xxhash64(F.concat_ws("_", *[band_slice[i] for i in range(rows_per_band)]))
             .alias("bucket")))
-    return (sigs.select("_id",
+    return (sigs.select("_id", *carry,
                         F.explode(F.array(*band_cols)).alias("bb"))
-            .select("_id", "bb.band", "bb.bucket"))
+            .select("_id", *carry, "bb.band", "bb.bucket"))
 
 
 def minhash_build_index(corpus: DataFrame, num_hashes: int = 16,
@@ -489,7 +496,10 @@ def minhash_incremental_flags(new_docs: DataFrame, corpus: DataFrame,
     corpus², which is what makes dedup sustainable when the corpus is
     100 TB and the day's crawl is 0.1% of it.  Each candidate is
     Jaccard-verified on true shingle sets; the per-doc best match
-    rounds before ranking with a corpus-id tie-break.
+    rounds before ranking with a corpus-id tie-break.  Two docs
+    without shingles (NULL or empty text, or fewer words than
+    ``shingle_n``) share the empty-slice bucket; their Jaccard is NULL
+    (as DuckDB's ``x/0``), so they count as candidates, never as dups.
 
     Verify-set sourcing: a :func:`save_minhash_index` artifact is
     NARROW (``_id`` + ``sig`` only — r11 directive #2: persisting
@@ -546,9 +556,10 @@ def minhash_incremental_flags(new_docs: DataFrame, corpus: DataFrame,
                                       F.col("shingles").alias("sha")), "i")
                 .join(corp_verify, "j")
                 .select("i", "j",
-                        F.round(F.size(F.array_intersect("sha", "shb"))
-                                .cast("double")
-                                / F.size(F.array_union("sha", "shb")), 6)
+                        F.round(F.try_divide(
+                            F.size(F.array_intersect("sha", "shb"))
+                            .cast("double"),
+                            F.size(F.array_union("sha", "shb"))), 6)
                         .alias("jr")))
     per_doc = verified.groupBy("i").agg(
         F.count("*").cast("long").alias("n_candidates"),
@@ -574,20 +585,9 @@ def minhash_incremental_flags(new_docs: DataFrame, corpus: DataFrame,
     # long-running ingest loop can unpersist them once the returned
     # frame is materialized — the per-call caches would otherwise
     # accumulate in executor storage for the session's lifetime (r13
-    # ADVICE; same handle convention as ``_cached_frames`` in
-    # :func:`pop_cached_frames`).
+    # ADVICE).
     out._cached_frames = cached
     return out
-
-
-def pop_cached_frames(stage_timings: dict) -> list[DataFrame]:
-    """Strip the reserved ``_cached_frames`` key (live DataFrame
-    handles :func:`minhash_lsh_pairs` exposes in profile mode so the
-    caller can unpersist them between reps) from a ``stage_timings``
-    dict, returning the frames.  Call this before JSON-serializing the
-    dict — the handles are not serializable and would otherwise pin
-    executor cache memory for as long as the dict lives."""
-    return stage_timings.pop("_cached_frames", [])
 
 
 def minhash_lsh_pairs(df: DataFrame, num_hashes: int = 16, bands: int = 4,
@@ -595,131 +595,137 @@ def minhash_lsh_pairs(df: DataFrame, num_hashes: int = 16, bands: int = 4,
                       id_col: str = "doc_id",
                       verify_threshold: float | None = None,
                       max_bucket: int | None = None,
-                      stage_timings: dict | None = None,
-                      prune_candidate_ids: bool = False,
                       exact_strings: bool = False) -> DataFrame:
     """LSH-banded candidate pairs with estimated and true Jaccard.
 
     Signature split into ``bands`` bands of ``num_hashes/bands`` rows;
-    band bucket = md5 of the band's hash values; candidates = distinct
-    (i < j) sharing any bucket.  Returns
+    band bucket = a hash of the band's slice (:func:`_band_frame`);
+    candidates = distinct (i < j) sharing any bucket.  Returns
     ``(i, j, est_jaccard, jaccard)``, optionally filtered to
-    ``jaccard >= verify_threshold``.
+    ``jaccard >= verify_threshold``.  ``est_jaccard`` is the share of
+    equal signature slots; ``jaccard`` is exact over the shingle sets,
+    NULL for two docs without shingles (NULL or empty text, or fewer
+    words than ``shingle_n`` — they all share the empty-slice bucket),
+    as DuckDB's ``x/0`` gives the oracles.
 
-    ``exact_strings``: by default the Jaccard VERIFY join carries each
-    side's shingle set as DISTINCT 64-bit ``stable_hash64`` values
+    One pass, filter-then-verify inside each bucket: every band row
+    carries its doc's signature and shingle set, one exchange groups
+    the rows by ``(band, bucket)``, and :func:`_bucket_pairs` sorts each
+    partition, emits every ``i < j`` pair of a bucket and verifies it
+    on the spot.  A pair sharing several buckets is verified once per
+    bucket and deduplicated after the threshold (its values are the
+    same each time).  The signature frame is read once, so nothing is
+    cached.
+
+    ``exact_strings``: by default each row carries its shingle set as
+    DISTINCT 64-bit ``stable_hash64`` values
     (``minhash_signature(hashed_shingles=True)``) — ~2.5× less shuffle
-    volume per candidate pair and long-vs-long set intersection, the
-    knob that matters when candidate pairs grow with duplicate-family
-    size (the 2M-doc sweep's verify stage shuffles millions of pairs).
+    volume per band row and a sorted long-vs-long intersection.
     Jaccard values are identical to the string form absent 64-bit
     collisions (same documented trade, same escape hatch, as
     ``crossdoc_dup_ngrams``); ``exact_strings=True`` keeps the
-    string-keyed verify for the oracle-gated registered queries, and
-    the two forms are proven pair-identical on the fixture corpus in
+    string sets for the oracle-gated registered queries, and the two
+    forms are proven pair-identical on the fixture corpus in
     ``tests/test_dedup.py``.
 
-    ``max_bucket`` drops band buckets holding more than that many docs
-    BEFORE the self-join — the stop-bucket treatment every
-    production-scale MinHash dedup needs (same idea as the ``max_df``
-    stop-shingle cap in :func:`ngram_jaccard_pairs`): a degenerate
-    bucket of ``g`` docs alone contributes ``g·(g-1)/2`` candidate
-    pairs, so one hot bucket can dominate the whole job's shuffle.
-    Pairs inside a dropped bucket usually still surface through one of
-    the other ``bands-1`` bucketings; truly identical docs belong to
-    the exact-dup (content-hash) pass anyway.  ``None`` (default)
-    keeps every bucket — the oracle-checked configuration of the
-    registered queries.
-
-    ``stage_timings`` (optional dict) is filled with ``sign_sec``,
-    ``band_sec`` and ``n_candidates`` by materializing each stage —
-    profiling mode for the bench sweep; leave ``None`` in production
-    plans (no extra barriers).  Round-8 profiling finding (r7
-    directive #4): SIGNING dominated — ~80% of the 1M-doc wall went
-    to the 16-md5s-per-shingle hash family, now replaced by one md5 +
-    affine derivation (see :func:`minhash_signature`); banding + the
-    capped self-join is join-bound at parquet-scan speed, and the
-    verify join is minor because the signature frame is already
-    cached.
-
-    ``prune_candidate_ids=True`` semi-joins the signature frame down
-    to the ids that survive banding before the verify join — the
-    right call on a real cluster where candidates are a sliver of the
-    corpus (the verify join then never shuffles corpus-sized shingle
-    arrays).  OFF by default: in the copy-salted bench corpus banding
-    marks most docs as candidates, so the prune measured neutral at
-    1M docs (48–81 s, within run variance of 48–55 s without) while
-    adding heap pressure at the 8g local bench config.
+    ``max_bucket`` skips band buckets holding more than that many docs
+    — the stop-bucket treatment every production-scale MinHash dedup
+    needs (same idea as the ``max_df`` stop-shingle cap in
+    :func:`ngram_jaccard_pairs`): a degenerate bucket of ``g`` docs
+    alone contributes ``g·(g-1)/2`` candidate pairs, so one hot bucket
+    can dominate the whole job.  Pairs inside a skipped bucket usually
+    still surface through one of the other ``bands-1`` bucketings;
+    truly identical docs belong to the exact-dup (content-hash) pass
+    anyway.  ``None`` (default) keeps every bucket — the
+    oracle-checked configuration of the registered queries.
     """
-    import time as _time
-
-    # The signature frame feeds banding AND both sides of the verify
-    # join — cache it so the 16 md5 min-hashes run once per doc.  (At
-    # cluster scale this would be a checkpoint/table write instead.)
-    sigs = minhash_signature(df, num_hashes, shingle_n, text_col, id_col,
-                             hashed_shingles=not exact_strings) \
-        .cache()
-    cached = [sigs]
     sh_col = "shingles" if exact_strings else "sh64"
-    if stage_timings is not None:
-        t0 = _time.perf_counter()
-        sigs.count()
-        stage_timings["sign_sec"] = round(_time.perf_counter() - t0, 3)
-    banded = _band_frame(sigs, num_hashes, bands)
-    if max_bucket is not None:
-        keep = (banded.groupBy("band", "bucket")
-                .agg(F.count("*").alias("_bn"))
-                .filter(F.col("_bn") <= max_bucket)
-                .select("band", "bucket"))
-        banded = banded.join(keep, ["band", "bucket"])
-    cand = (banded.alias("a")
-            .join(banded.alias("b"), ["band", "bucket"])
-            .filter(F.col("a._id") < F.col("b._id"))
-            .select(F.col("a._id").alias("i"), F.col("b._id").alias("j"))
-            .distinct())
-    if stage_timings is not None:
-        # cache only in profile mode: the count barrier would otherwise
-        # recompute the banding self-join for the verify pass.
-        cand = cand.cache()
-        cached.append(cand)
-        t0 = _time.perf_counter()
-        stage_timings["n_candidates"] = cand.count()
-        stage_timings["band_sec"] = round(_time.perf_counter() - t0, 3)
-        # Spark's cache manager matches by CANONICALIZED PLAN, not by
-        # DataFrame object — a later rebuild of the same pipeline over
-        # the same input silently reads these entries (r11 finding:
-        # sweep rep 2/3 signed 2M docs in 0.06 s because rep 1's sigs
-        # cache was still resident).  Hand the internal cached frames
-        # to the profiling caller so it can unpersist between reps.
-        # "_cached_frames" is a RESERVED key holding live DataFrame
-        # handles — strip it with :func:`pop_cached_frames` before
-        # JSON-serializing the dict (r11 ADVICE).
-        stage_timings["_cached_frames"] = cached
-    src = sigs
-    if prune_candidate_ids:
-        ids = (cand.select(F.col("i").alias("_id"))
-               .union(cand.select(F.col("j").alias("_id")))
-               .distinct())
-        src = sigs.join(ids, "_id", "left_semi")
-    left = src.select(F.col("_id").alias("i"), F.col(sh_col).alias("sha"),
-                      F.col("sig").alias("siga"))
-    right = src.select(F.col("_id").alias("j"), F.col(sh_col).alias("shb"),
-                       F.col("sig").alias("sigb"))
-    est = (F.size(F.filter(F.zip_with(F.col("siga"), F.col("sigb"),
-                                      lambda x, y: x == y), lambda m: m))
-           .cast("double") / num_hashes)
-    true_j = (F.size(F.array_intersect(F.col("sha"), F.col("shb"))).cast("double")
-              / F.size(F.array_union(F.col("sha"), F.col("shb"))))
-    out = (cand.join(left, "i").join(right, "j")
-           .select("i", "j", est.alias("est_jaccard"), true_j.alias("jaccard")))
+    sigs = minhash_signature(df, num_hashes, shingle_n, text_col, id_col,
+                             hashed_shingles=not exact_strings)
+
+    def kernel(batches):
+        return _bucket_pairs(batches, num_hashes, max_bucket, exact_strings)
+
+    out = (_band_frame(sigs, num_hashes, bands, carry=("sig", sh_col))
+           .repartition("band", "bucket")
+           .mapInArrow(kernel, schema="i long, j long, est_jaccard double, "
+                                      "jaccard double"))
     if verify_threshold is not None:
         out = out.filter(F.col("jaccard") >= verify_threshold)
-    # The caches ride on the result (same handle convention as
-    # :func:`minhash_incremental_flags`): :func:`dedup_components`
-    # unpersists them once it has read its edge list, and any other
-    # consumer can do the same after materializing ``out``.
-    out._cached_frames = cached
-    return out
+    return out.dropDuplicates(["i", "j"])
+
+
+def _bucket_pairs(batches, num_hashes: int, max_bucket: int | None,
+                  exact_strings: bool):
+    """:func:`minhash_lsh_pairs`' kernel over one partition of band
+    rows ``(_id, sig, shingles|sh64, band, bucket)``: sort by ``(band,
+    bucket, _id)``, skip runs of one row or of more than ``max_bucket``,
+    and emit every ``i < j`` pair of each remaining run with its
+    ``est_jaccard`` (equal slots / ``num_hashes``; a NULL slot never
+    matches) and its true Jaccard (NULL over two empty sets).  Only
+    rows in emitted runs have their signature and set decoded."""
+    import numpy as np
+
+    rbs = list(batches)
+    if not rbs:
+        return
+    t = pa.Table.from_batches(rbs)
+    order = pc.sort_indices(t, sort_keys=[("band", "ascending"),
+                                          ("bucket", "ascending"),
+                                          ("_id", "ascending")])
+    band = t.column("band").take(order).to_numpy()
+    bucket = t.column("bucket").take(order).to_numpy()
+    starts = np.flatnonzero(np.concatenate(
+        [[True], (band[1:] != band[:-1]) | (bucket[1:] != bucket[:-1])]))
+    lens = np.diff(np.append(starts, len(band)))
+    emit = lens >= 2
+    if max_bucket is not None:
+        emit &= lens <= max_bucket
+    if not emit.any():
+        return
+    # Decode only the rows of emitted runs; `at` maps a sorted position
+    # to its row among them.
+    rows = np.repeat(emit, lens)
+    at = np.cumsum(rows) - 1
+    sel = t.take(order.filter(pa.array(rows)))
+    ids_col = sel.column("_id")
+    ids = pc.fill_null(ids_col, 0).to_numpy()
+    has_id = ids_col.is_valid().to_numpy(zero_copy_only=False)
+    ia, ib = [], []
+    for g in np.unique(lens[emit]):
+        s = starts[emit & (lens == g)]
+        a, b = np.triu_indices(g, 1)
+        ia.append(at[(s[:, None] + a).ravel()])
+        ib.append(at[(s[:, None] + b).ravel()])
+    ia, ib = np.concatenate(ia), np.concatenate(ib)
+    keep = (ids[ia] < ids[ib]) & has_id[ia] & has_id[ib]
+    ia, ib = ia[keep], ib[keep]
+    if not len(ia):
+        return
+
+    sig = pc.fill_null(sel.column("sig").combine_chunks().flatten(), -1) \
+        .to_numpy().reshape(-1, num_hashes)
+    est = ((sig[ia] == sig[ib]) & (sig[ia] >= 0)).sum(axis=1) / num_hashes
+
+    sh = sel.column("shingles" if exact_strings else "sh64").combine_chunks()
+    size = pc.fill_null(pc.list_value_length(sh), 0).to_numpy()
+    if exact_strings:
+        sets = [set(s or ()) for s in sh.to_pylist()]
+        inter = np.array([len(sets[x] & sets[y]) for x, y in zip(ia, ib)],
+                         dtype=np.int64)
+    else:
+        flat = sh.flatten().to_numpy()
+        off = np.concatenate([[0], np.cumsum(size)])
+        inter = np.array(
+            [np.intersect1d(flat[off[x]:off[x + 1]], flat[off[y]:off[y + 1]],
+                            assume_unique=True).size
+             for x, y in zip(ia, ib)], dtype=np.int64)
+    union = size[ia] + size[ib] - inter
+    jac = inter / np.maximum(union, 1)
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(ids[ia]), pa.array(ids[ib]), pa.array(est),
+         pa.array(jac, mask=union == 0)],
+        names=["i", "j", "est_jaccard", "jaccard"])
 
 
 def simhash_fingerprints(df: DataFrame, bits: int = 16,
@@ -1052,10 +1058,6 @@ def dedup_components(pairs: DataFrame, ids: DataFrame, rounds: int = 5,
       stays persisted is what the returned frame reads: the last
       round's labels and, for the convergence probe, the edge list.
 
-    Either path unpersists the caches ``pairs`` hands over as
-    ``_cached_frames`` (:func:`minhash_lsh_pairs`' signature cache)
-    once the edge list has been read: nothing downstream reads them.
-
     Both paths give identical rows (differential-tested in
     ``tests/test_properties_dedup.py``).
     """
@@ -1069,7 +1071,6 @@ def dedup_components(pairs: DataFrame, ids: DataFrame, rounds: int = 5,
     small = und.limit(SMALL_SIDE_CAP + 1).toArrow()
     if small.num_rows <= SMALL_SIDE_CAP:
         _release_checkpoint(und)
-        _release_cached(pairs)
         return _components_on_driver(small, ids, rounds, id_col,
                                      convergence_check)
 
@@ -1077,7 +1078,6 @@ def dedup_components(pairs: DataFrame, ids: DataFrame, rounds: int = 5,
                                         F.col("_a").alias("_b")))
              .distinct().localCheckpoint())
     _release_checkpoint(und)
-    _release_cached(pairs)
     labels = ids.select(F.col(id_col).alias("_a"),
                         F.col(id_col).cast("long").alias("_label"))
 
@@ -1124,20 +1124,12 @@ def _release_checkpoint(df: DataFrame) -> None:
     df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
-def _release_cached(pairs: DataFrame) -> None:
-    """Unpersist the caches a pair generator hands over on its result
-    (``_cached_frames``, e.g. :func:`minhash_lsh_pairs`' signatures)."""
-    for frame in getattr(pairs, "_cached_frames", ()):
-        frame.unpersist()
-
-
 def _components_on_driver(edges, ids: DataFrame, rounds: int, id_col: str,
                           convergence_check: bool) -> DataFrame:
     """``dedup_components``' rounds in NumPy over a driver-resident
     edge list (an Arrow table of ``_a``/``_b`` pairs, either direction,
     repeats allowed — the min over neighbors ignores both)."""
     import numpy as np
-    import pyarrow as pa
 
     m = edges.num_rows
     nodes, inv = np.unique(np.concatenate([edges.column("_a").to_numpy(),
@@ -1187,7 +1179,6 @@ def semantic_decontaminate(train: DataFrame, benchmark: DataFrame,
     never pairs.
     """
     import numpy as np
-    import pyarrow as pa
 
     b_ids, B = small_side(
         benchmark, id_col, vec_col, "semantic_decontaminate benchmark",
@@ -1253,7 +1244,6 @@ def embedding_neardup_pairs(df: DataFrame, threshold: float = 0.9,
                 .select("i", "j", "cosine"))
 
     import numpy as np
-    import pyarrow as pa
 
     ids, V = small_side(
         df, id_col, vec_col, "embedding_neardup_pairs corpus",
@@ -1300,7 +1290,6 @@ def embedding_neardup_pruned(df: DataFrame, threshold: float = 0.4,
     """
     import numpy as np
     import pandas as pd
-    import pyarrow as pa
 
     from python_vector_db___ai_spark.operators.ivf import (
         build_centroids,

@@ -202,23 +202,99 @@ def _new_persisted(sc, before: set) -> set:
 
 def test_dedup_components_releases_minhash_signature_cache(
         spark, docs, components_path):
-    """``minhash_lsh_pairs`` caches its signature frame and hands it
-    over on its result; ``dedup_components`` unpersists it once the
-    edge list is read.  After the collect the driver path leaves
-    nothing persisted, the Spark path only what its result reads (the
-    edge list and the last round's labels)."""
+    """``minhash_lsh_pairs`` persists nothing, and after the collect
+    ``dedup_components``' driver path leaves nothing persisted, its
+    Spark path only what its result reads (the edge list and the last
+    round's labels)."""
     from python_vector_db___ai_spark.operators.dedup import dedup_components
 
     sc = spark.sparkContext
     for path, left in (("driver", 0), ("spark", 2)):
         before = set(sc._jsc.getPersistentRDDs().keys())
         pairs = minhash_lsh_pairs(docs, verify_threshold=0.5)
-        assert pairs._cached_frames
+        assert pairs.count() > 0
+        assert _new_persisted(sc, before) == set()
         with components_path(path):
             rows = dedup_components(pairs, docs.select("doc_id"),
                                     rounds=3).collect()
         assert len(_new_persisted(sc, before)) == left, path
         assert {r.doc_id: r.component_id for r in rows}[2] == 1
+
+
+@pytest.mark.parametrize("name", ["dedup_minhash_lsh", "dedup_components"])
+def test_registered_minhash_queries_leave_nothing_persisted(spark, name):
+    """The registered MinHash queries collect without leaving a cached
+    or checkpointed RDD behind."""
+    from python_vector_db___ai_spark.plans.queries import all_queries
+    from tests.conftest import SF_DIR
+
+    spark.catalog.clearCache()   # a cache an earlier test left is no proof
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keys())
+    assert all_queries()[name].spark_fn(spark, SF_DIR).collect()
+    assert _new_persisted(sc, before) == set()
+
+
+def test_minhash_lsh_pairs_runs_in_few_jobs(spark):
+    """Sign + band, the bucket-verify kernel and the pair dedup: one
+    job per exchange-bounded stage, no count barrier or cache fill."""
+    from python_vector_db___ai_spark.session import load_table
+    from tests.conftest import SF_DIR
+
+    docs = load_table(spark, SF_DIR, "documents")
+    pairs = minhash_lsh_pairs(docs, shingle_n=3, verify_threshold=0.7)
+    sc = spark.sparkContext
+    sc.setJobGroup("test-minhash-jobs", "minhash_lsh_pairs")
+    try:
+        pairs.toArrow()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("test-minhash-jobs")
+    assert 1 <= len(jobs) <= 4
+
+
+@pytest.mark.parametrize("exact_strings", [False, True])
+def test_minhash_lsh_pairs_docs_without_shingles(spark, exact_strings):
+    """Docs without shingles (fewer words than ``shingle_n``, empty or
+    NULL text) share the empty-slice bucket: they pair with each other
+    at Jaccard NULL and est_jaccard 0 (a NULL slot never matches)
+    instead of failing the job on 0/0, and a verify threshold drops
+    them.  A NULL id never pairs."""
+    df = spark.createDataFrame(
+        [(1, "hello world"), (2, "foo bar"), (3, ""), (4, None),
+         (5, "a b c d"), (6, "a b c d"), (None, "a b c d")],
+        "doc_id long, text string")
+    got = {(r.i, r.j): (r.est_jaccard, r.jaccard) for r in
+           minhash_lsh_pairs(df, shingle_n=3,
+                             exact_strings=exact_strings).collect()}
+    empty = [1, 2, 3, 4]
+    assert got == {**{(i, j): (0.0, None) for i in empty for j in empty
+                      if i < j},
+                   (5, 6): (1.0, 1.0)}
+    verified = minhash_lsh_pairs(df, shingle_n=3, verify_threshold=0.5,
+                                 exact_strings=exact_strings).collect()
+    assert [(r.i, r.j) for r in verified] == [(5, 6)]
+
+
+def test_minhash_incremental_flags_docs_without_shingles(spark):
+    """An increment doc without shingles meets the corpus's shingle-less
+    docs in the empty-slice bucket: they count as candidates with a NULL
+    Jaccard, never as dups, and the job does not fail on 0/0."""
+    from python_vector_db___ai_spark.operators.dedup import (
+        minhash_incremental_flags,
+    )
+
+    corpus = spark.createDataFrame(
+        [(1, "hello world"), (2, "alpha beta gamma delta")],
+        "doc_id long, text string")
+    new = spark.createDataFrame(
+        [(10, "foo bar"), (11, "alpha beta gamma delta")],
+        "doc_id long, text string")
+    out = {r.doc_id: r for r in
+           minhash_incremental_flags(new, corpus, shingle_n=3).collect()}
+    assert out[10].n_candidates == 1 and out[10].n_dups == 0
+    assert out[10].best_jaccard is None and out[10].is_dup is False
+    assert out[11].is_dup and out[11].best_match == 2
 
 
 def test_dedup_components_spark_path_keeps_only_last_round(

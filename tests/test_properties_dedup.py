@@ -11,7 +11,8 @@ Covers the families whose plans were rewritten for scale in rounds
 sf0.01 oracle: crossdoc_dup_ngrams (single-shuffle solo-mass form),
 span_dedup (one-aggregate keeper), dedup_components (bounded-round
 min-label propagation; its driver path is also checked row-for-row
-against its Spark round loop), decontaminate (postings equi-join).
+against its Spark round loop), decontaminate (postings equi-join),
+minhash_lsh_pairs (one-pass bucket-verify kernel).
 """
 
 from __future__ import annotations
@@ -237,6 +238,73 @@ def test_minhash_signature_expr_matches_python(sp, corpus, shingle_n):
         want = [min((a * h + b) % MINHASH_P for h in bases)
                 for a, b in consts]
         assert list(got[i].sig) == want
+
+
+@pytest.mark.parametrize("exact_strings", [False, True])
+@settings(max_examples=6, deadline=None)
+@given(corpus=_corpus, shingle_n=st.integers(min_value=1, max_value=2))
+# two docs without shingles: Jaccard NULL, est 0
+@example(corpus=[[], []], shingle_n=1)
+# a hot bucket over the cap beside a family under it
+@example(corpus=[["aa", "bb"]] * 3 + [["cc"], ["cc"]], shingle_n=1)
+def test_minhash_lsh_pairs_matches_python(sp, exact_strings, corpus,
+                                          shingle_n):
+    """The one-pass bucket-verify kernel equals a plain-Python replay
+    over the expression form's signatures: pairs are the ``i < j`` docs
+    sharing a band slice in a bucket of at most ``max_bucket`` docs,
+    ``est_jaccard`` is equal (non-NULL) slots / ``num_hashes``, and
+    ``jaccard`` is exact over the shingle sets, NULL for two empty
+    sets and dropped by a verify threshold."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    from python_vector_db___ai_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        minhash_signature_expr,
+    )
+
+    k, bands = 8, 4
+    rows = k // bands
+    docs = _mk_docs(sp, corpus)
+    sigs = {r["_id"]: (set(r.shingles), list(r.sig)) for r in
+            minhash_signature_expr(docs, num_hashes=k,
+                                   shingle_n=shingle_n).collect()}
+    configs = [(mb, vt) for mb in (None, 2) for vt in (None, 0.5)]
+    got: dict = {c: {} for c in configs}
+    frames = [minhash_lsh_pairs(docs, num_hashes=k, bands=bands,
+                                shingle_n=shingle_n, max_bucket=mb,
+                                verify_threshold=vt,
+                                exact_strings=exact_strings)
+              .withColumn("cfg", F.lit(n))
+              for n, (mb, vt) in enumerate(configs)]
+    for r in reduce(lambda a, b: a.unionByName(b), frames).collect():
+        pair = (r.i, r.j)
+        assert pair not in got[configs[r.cfg]]
+        got[configs[r.cfg]][pair] = (r.est_jaccard, r.jaccard)
+
+    buckets: dict = {}
+    for i, (_, sig) in sigs.items():
+        for b in range(bands):
+            key = (b, tuple(sig[b * rows:(b + 1) * rows]))
+            buckets.setdefault(key, []).append(i)
+    for mb, vt in configs:
+        want = {}
+        for members in buckets.values():
+            if mb is not None and len(members) > mb:
+                continue
+            for i in members:
+                for j in members:
+                    if i >= j:
+                        continue
+                    (sa, ga), (sb, gb) = sigs[i], sigs[j]
+                    est = sum(x is not None and x == y
+                              for x, y in zip(ga, gb)) / k
+                    union = len(sa | sb)
+                    jac = len(sa & sb) / union if union else None
+                    if vt is None or (jac is not None and jac >= vt):
+                        want[(i, j)] = (est, jac)
+        assert got[(mb, vt)] == want, (mb, vt)
 
 
 @settings(max_examples=10, deadline=None)

@@ -39,8 +39,17 @@ SHOWCASE = [
      "per-doc text profile: one wide codegen'd scan for the per-doc "
      "columns; per-lang distinct stats as one hash aggregation "
      "broadcast back - NO window over the skewed lang key"),
+    ("dedup_minhash_lsh",
+     "MinHash near-dup pairs in one bucket-verify pass: the map-only "
+     "Arrow signing feeds an explode of band rows carrying signature "
+     "and shingle set, ONE exchange on (band, bucket), a MapInArrow "
+     "kernel that sorts each partition and verifies every pair of a "
+     "bucket in place, then the verify threshold and one aggregate "
+     "dropping pairs found in several bands - no self-join, no verify "
+     "join, no cache"),
     ("dedup_components",
-     "dedup keep list: exact-dup star edges + MinHash pairs, "
+     "dedup keep list: exact-dup star edges + MinHash pairs (the "
+     "one-pass bucket-verify plan above), "
      "bounded-round min-label propagation run on the driver (the edge "
      "list fits SMALL_SIDE_CAP), so the plan is the id scan LEFT JOIN a "
      "broadcast (node, label, size) literal table with the convergence "
